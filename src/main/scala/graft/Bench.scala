@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: times every SparkEntry query at the env-selected
   * scale factor and prints ONE JSON line. Full evaluation is forced with
@@ -58,7 +59,7 @@ object Bench {
     try {
       val src = scala.io.Source.fromFile("/proc/loadavg")
       try src.mkString.split("\\s+")(0).toDouble finally src.close()
-    } catch { case _: Throwable => -1.0 }
+    } catch { case NonFatal(_) => -1.0 }
 
   // (total busy CPU jiffies across the box, this JVM's own jiffies) —
   // the difference over a wall-clock window is EXTERNAL load, the
@@ -78,7 +79,7 @@ object Bench {
       // comm may contain spaces — fields resume after the last ')'
       val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
       (busy, rest(11).toLong + rest(12).toLong) // utime + stime
-    } catch { case _: Throwable => (-1L, -1L) }
+    } catch { case NonFatal(_) => (-1L, -1L) }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -113,7 +114,7 @@ object Bench {
     // session warmup: run the flagship once so JVM/codegen/scheduler
     // warmup is not charged to whichever query happens to run first
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    catch { case e: Throwable => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
     // one-time co-purchase snapshot build is SETUP (the scaled tier's
     // materialize precedent): post-reap graph queries read it back in
     // seconds instead of paying the suite's densest self-join. Its cost
@@ -122,7 +123,7 @@ object Bench {
     // outside every per-query median).
     val setupT0 = System.nanoTime()
     try graft.queries.PipelineQueries.snapshotCopurchase(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[bench] snapshot failed: ${e.getMessage}") }
+    catch { case NonFatal(e) => System.err.println(s"[bench] snapshot failed: ${e.getMessage}") }
     val setupSec = (System.nanoTime() - setupT0) / 1e9
 
     val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
@@ -195,12 +196,12 @@ object Bench {
     // timed region, sink, iteration count and median are unchanged.
     val warmups =
       try sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
-      catch { case _: Throwable => 1 }
+      catch { case NonFatal(_) => 1 }
     val perQuery = selected.map { case (name, fn) =>
       reapBlocks()
       (1 to warmups).foreach { _ =>
         try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => () } // timed loop reports the failure
+        catch { case NonFatal(_) => () } // timed loop reports the failure
       }
       val (tb0, sj0) = cpuJiffies()
       val tq0 = System.nanoTime()
@@ -211,7 +212,7 @@ object Bench {
           fn(spark, sfDir).write.mode("overwrite").format("noop").save()
           Some(((System.nanoTime() - t0) / 1e9, l))
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
             None
         }
@@ -278,7 +279,7 @@ object Bench {
         ops
       }
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench] scaled tier failed: ${e.getMessage}")
         failed += 1
         Seq.empty
@@ -317,7 +318,7 @@ object Bench {
     val loadJson = s""","load_before":${s2(loadBefore)},"load_after":${s2(loadAfter)}"""
     // the line carries only the slowest queries (failures first, value
     // -1) — short prefix keys, 2 decimals; everything is in the detail
-    val topQ = try sys.env.getOrElse("SPARK_GRAFT_BENCH_TOPQ", "12").toInt catch { case _: Throwable => 12 }
+    val topQ = try sys.env.getOrElse("SPARK_GRAFT_BENCH_TOPQ", "12").toInt catch { case NonFatal(_) => 12 }
     val shortQs = results.sortBy { case (_, v) => if (v < 0) Double.MinValue else -v }
       .take(topQ)
       .map { case (k, v) => "\"" + k.takeWhile(_ != '_') + "\":" + s2(v) }
@@ -344,7 +345,7 @@ object Bench {
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
       try w.println(detail) finally w.close()
-    } catch { case e: Throwable => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
+    } catch { case NonFatal(e) => System.err.println(s"[bench] detail write failed: ${e.getMessage}") }
     if (line.length > 1850)
       System.err.println(s"[bench] WARNING: JSON line is ${line.length} chars — may overflow the 2000-char tail")
     println(line)

@@ -4,14 +4,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session factory + table loading for the graft engine.
   *
-  * Settings chosen for the local[32] harness but scale-minded: shuffle
+  * Settings are scale-minded for any `local[n]` session: shuffle
   * partitions sized to cores (not the 200 default), AQE on so skewed
   * shuffles re-plan at runtime, broadcast threshold left at default so
   * dimension tables (nation/region/catalogs) broadcast automatically.
   * Non-ANSI cast semantics match the reference's coerce-to-null casts
-  * (pd.to_numeric(errors="coerce"), /root/reference/src/transform_pipeline.py:52).
+  * (pd.to_numeric(errors="coerce") in the reference transform pipeline).
   */
 object GraftSession {
+
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). One
+    * `RunHomologation.main` run generates about 140 distinct classes, and
+    * two grids with different header shapes about 150 together. At 100
+    * entries the LRU evicts each class before its next use, so every
+    * run compiles about 130 classes again. At 2,000 a repeated run
+    * compiles none, and the cache still has room for a dozen such
+    * working sets, or a mixed query suite, in one long-lived session.
+    * The conf is static and read once per JVM, when Spark's
+    * `CodeGenerator` first initializes, so it takes effect only when
+    * this builds the JVM's first session. */
+  val CodegenCacheEntries: Int = 2000
+
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -30,6 +44,7 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftOptimizations.install(spark)
@@ -37,7 +52,9 @@ object GraftSession {
   }
 
   /** Apply engine-required runtime confs to an externally-created session
-    * (the driver may hand us its own). Only session-mutable confs here. */
+    * (a caller may hand us its own). Only session-mutable confs here:
+    * the codegen cache size ([[CodegenCacheEntries]]) is static, so a
+    * session created elsewhere has to set it when it is created. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")

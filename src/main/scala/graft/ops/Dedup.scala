@@ -260,7 +260,11 @@ object Dedup {
     * image dHash ([[graft.ops.Multimodal.imageDHashScan]]), audio
     * chromaprints or any future 64-bit fingerprint reuses it. NULL
     * hashes (undecodable members) drop out before the join. Returns
-    * (a, b, hamming) with a < b.
+    * (a, b, hamming) with a < b. Repeated (id, hash) rows count once.
+    * An id may sit under several hashes: it never pairs with itself,
+    * but it pairs with another id once per (hash, hash) combination
+    * within `maxHamming`; callers with such ids reduce the result to one
+    * row per (a, b).
     *
     * Round-18 shape — the LSH citizens are DISTINCT hashes, not
     * members: crawl-duplicate corpora carry many members per identical
@@ -289,6 +293,7 @@ object Dedup {
       s"hashNearDups: banding covers Hamming 0..3, got $maxHamming")
     val src = df.where(col(hashCol).isNotNull)
       .select(col(idCol), col(hashCol).cast("long").as("_h"))
+      .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val chunks = hashBandChunks(col("_h"), maxHamming)
     val reps = src.select(col("_h")).distinct()
@@ -303,12 +308,14 @@ object Dedup {
       .distinct()
     // cross-group expansion: each unordered hash pair appears once
     // (_ha < _hb), so each member pair appears once — least/greatest
-    // restores the a < b contract whatever the id distribution
+    // orders it, and a < b drops the self-pair of an id that sits under
+    // both hashes
     val cross = hashPairs
       .join(src.select(col(idCol).as("_ia"), col("_h").as("_ha")), Seq("_ha"))
       .join(src.select(col(idCol).as("_ib"), col("_h").as("_hb")), Seq("_hb"))
       .select(least(col("_ia"), col("_ib")).as("a"),
         greatest(col("_ia"), col("_ib")).as("b"), col("hamming"))
+      .where(col("a") < col("b"))
     // within-group pairs: identical hashes are Hamming 0 ≤ any threshold
     val same = src.as("x")
       .join(src.as("y"),
@@ -876,8 +883,12 @@ object Dedup {
       }
     // one (id, gram, df) join feeds BOTH the prefix windows and (in the
     // capped case) the filtered inverted index — identical subplans so
-    // the exchange is reused instead of the join running twice
-    val withDf = grams.join(kept, Seq("_g"))
+    // the exchange is reused instead of the join running twice.
+    // The two gram joins shuffle-hash on their smaller side: the planner
+    // sizes an explode like its input, so it would broadcast the
+    // (id, gram) table, one row per shingle, and the driver keeps a
+    // broadcast relation until the context cleaner runs after a later GC
+    val withDf = grams.join(kept.hint("SHUFFLE_HASH"), Seq("_g"))
     val wp = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("_df"), col("_g"))
     val wn = org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))
@@ -887,7 +898,7 @@ object Dedup {
       .where(col("_rn") <= expr(s"(_n * ${1000000L - thresholdMicro}) div 1000000") + 1)
       .select(col(idCol).as("a"), col("_g"))
     val indexGrams = if (capped) withDf else grams
-    val cands = prefix
+    val cands = prefix.hint("SHUFFLE_HASH")
       .join(indexGrams.select(col(idCol).as("b"), col("_g")), Seq("_g"))
       .where(col("a") =!= col("b"))
       .select("a", "b").distinct()

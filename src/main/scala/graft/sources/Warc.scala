@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** WARC (ISO 28500) ingestion — the container CommonCrawl-scale web
   * corpora actually arrive in, read DISTRIBUTED: `spark.read.text` with
@@ -268,7 +269,7 @@ object Warc {
             if (csName == null) java.nio.charset.StandardCharsets.UTF_8
             else java.nio.charset.Charset.forName(csName)
           } catch {
-            case _: Throwable => java.nio.charset.StandardCharsets.UTF_8
+            case NonFatal(_) => java.nio.charset.StandardCharsets.UTF_8
           }
         val (body, lossy) = decodeWith(bodyBytes, cs)
         (r._hdrs, head, body, csName, lossy, p.length.toLong)

@@ -7,6 +7,7 @@ import org.apache.hadoop.io.{BytesWritable, NullWritable}
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, GzipCodec}
 import org.apache.hadoop.mapreduce.{InputSplit, JobContext, RecordReader, TaskAttemptContext}
 import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
+import scala.util.control.NonFatal
 
 /** LOSSLESS splittable WARC (ISO 28500) input — the "custom InputFormat
   * that walks Content-Length from each split boundary" upgrade that
@@ -315,7 +316,7 @@ class WarcRecordReader extends RecordReader[NullWritable, BytesWritable] {
       while (k < head.length && { r = g.read(head, k, head.length - k); r > 0 })
         k += r
       k == head.length && java.util.Arrays.equals(head, Magic)
-    } catch { case _: Throwable => false } finally probe.close()
+    } catch { case NonFatal(_) => false } finally probe.close()
   }
 
   private def pushBack(bytes: Array[Byte], n: Int): Unit = {

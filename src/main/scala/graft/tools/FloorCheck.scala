@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import scala.util.control.NonFatal
 
 /** The round ritual for bench adjudication (SCALING.md "Pinned idle
   * floors"): re-measures the pinned top gates on an IDLE box and
@@ -35,7 +36,7 @@ object FloorCheck {
   private def load1(): Double =
     try scala.io.Source.fromFile("/proc/loadavg").mkString
       .split(" ").head.toDouble
-    catch { case _: Throwable => -1.0 }
+    catch { case NonFatal(_) => -1.0 }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -54,7 +55,7 @@ object FloorCheck {
     spark.sparkContext.setLogLevel("WARN")
     val loadBefore = load1()
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    catch { case e: Throwable => System.err.println(s"warmup: ${e.getMessage}") }
+    catch { case NonFatal(e) => System.err.println(s"warmup: ${e.getMessage}") }
     val rows = Pinned.map { case (name, pinned) =>
       // NO clearCache between iterations — the pinned floors were
       // measured with TimeOne's protocol (caches persist across

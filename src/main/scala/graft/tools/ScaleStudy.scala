@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import graft.ops.{AsofJoin, CorpusOps, Dedup, Ffill, TextAnalysis}
 import graft.streaming.EventsStream
+import scala.util.control.NonFatal
 
 /** Scaling study: times the headline operators at 1×/4×/20× the sf0.1
   * corpus (and 1×/10× events) to measure how wall time grows with rows —
@@ -164,7 +165,7 @@ object ScaledOps {
         val t0 = System.nanoTime()
         try { f; Some((System.nanoTime() - t0) / 1e9) }
         catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[bench-scaled] $name FAILED: ${e.getMessage}")
             None
         }
@@ -491,7 +492,7 @@ object ScaledOps {
       val hits = approx.join(exact.select("qid", "nid"), Seq("qid", "nid"), "left_semi").count()
       "ann_ivfpq_recall_pct" -> (if (total == 0) -1.0 else hits * 100.0 / total)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         System.err.println(s"[bench-scaled] ann_ivfpq_recall_pct FAILED: ${e.getMessage}")
         "ann_ivfpq_recall_pct" -> -1.0
     }

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** SCALED correctness pins — the gate the sf0.01 DuckDB oracle cannot
   * be: scale-DEPENDENT wrongness (an overflow past a `require`
@@ -269,7 +270,7 @@ object ScaledCheck {
         val (n, h) = f()
         (n, h, null: String)
       } catch {
-        case e: Throwable => (-1L, 0L, String.valueOf(e.getMessage).take(200))
+        case NonFatal(e) => (-1L, 0L, String.valueOf(e.getMessage).take(200))
       }
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[scaled-check] $name%-20s rows=${out._1}%-9d hash=${out._2}%-21d ${sec}%6.1f s" +
@@ -342,11 +343,11 @@ object ScaledCheck {
                 java.nio.file.Files.readString(refPath).trim
               else "" // fresh ref only in packed-refs: treat as unknown
             } else head
-          } catch { case _: Throwable => "" }
+          } catch { case NonFatal(_) => "" }
           val stale = recRev.isEmpty || headRev.isEmpty || recRev != headRev
           s""","oracle_stale":$stale,"oracle":$body"""
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(
               s"[scaled-check] SCALED_ORACLE.json unparseable, skipping splice: ${e.getMessage}")
             ""

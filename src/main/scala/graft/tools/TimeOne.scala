@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import scala.util.control.NonFatal
 
 /** Times named queries individually (N iterations each, all timings
   * printed) — the per-query microscope behind Bench's medians.
@@ -25,7 +26,7 @@ object TimeOne {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    catch { case e: Throwable => System.err.println(s"warmup failed: ${e.getMessage}") }
+    catch { case NonFatal(e) => System.err.println(s"warmup failed: ${e.getMessage}") }
     names.foreach { n =>
       val ts = (1 to iters).map { _ =>
         val t0 = System.nanoTime()

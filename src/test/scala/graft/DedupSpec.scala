@@ -247,9 +247,12 @@ class DedupSpec extends AnyFunSuite {
       (3L, "alpha beta gamma delta"),    // unrelated
       (4L, "same same2 same3 same4 same5"), (5L, "same same2 same3 same4 same5")
     ).toDF("doc_id", "text")
-    val out = Dedup.containmentPairs(docs, thresholdMicro = 900000L)
-      .orderBy("a", "b").collect()
+    val df = Dedup.containmentPairs(docs, thresholdMicro = 900000L).orderBy("a", "b")
+    val out = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getInt(3), r.getLong(5)))
+    // the (id, gram) tables are never broadcast, however small they look
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("ShuffledHashJoin [_g") && !plan.contains("BroadcastHashJoin [_g"), plan)
     assert(out.toSeq == Seq(
       (1L, 2L, 8, 8, 1000000L),   // embedded doc: full containment
       (4L, 5L, 3, 3, 1000000L),   // identical pair, both directions

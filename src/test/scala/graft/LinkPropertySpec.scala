@@ -74,8 +74,13 @@ class LinkPropertySpec extends AnyFunSuite {
   }
 
   test("hashNearDups: output is order-insensitive and a < b always holds") {
+    val twoHashes = 7L << 20
     val hashes = (0 until 40).map(i => (i.toLong, rnd.nextLong())) ++
-      Seq((100L, 42L), (101L, 42L | (1L << 7))) // planted hamming-1 pair
+      Seq((100L, 42L), (101L, 42L | (1L << 7))) ++ // planted hamming-1 pair
+      // non-unique ids: one id under two hashes one bit apart, and
+      // repeated (id, hash) rows across and within a hash group
+      Seq((200L, twoHashes), (200L, twoHashes ^ 1L),
+        (100L, 42L), (300L, 99L << 30), (300L, 99L << 30), (301L, 99L << 30))
     val fwd = graft.ops.Dedup.hashNearDups(
         hashes.toDF("media_id", "dhash"), "media_id", "dhash")
       .orderBy("a", "b").collect().map(_.toSeq).toSeq
@@ -84,6 +89,9 @@ class LinkPropertySpec extends AnyFunSuite {
       .orderBy("a", "b").collect().map(_.toSeq).toSeq
     assert(fwd == rev)
     assert(fwd.exists(r => r(0) == 100L && r(1) == 101L))
+    assert(fwd.exists(r => r(0) == 300L && r(1) == 301L))
     assert(fwd.forall(r => r(0).asInstanceOf[Long] < r(1).asInstanceOf[Long]))
+    val pairs = fwd.map(r => (r(0), r(1)))
+    assert(pairs.distinct.size == pairs.size, s"duplicate pairs in $pairs")
   }
 }

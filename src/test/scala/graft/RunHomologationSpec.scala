@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.GraftSession
 import graft.queries.PipelineQueries
 import graft.sources.OrderedScan
 
@@ -14,17 +16,23 @@ import graft.sources.OrderedScan
 class RunHomologationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("csvGrid round-trips a CRLF grid with embedded-newline headers") {
-    val grid = PipelineQueries.demoGrid(spark)
-    val rows = grid.orderBy("_row_idx").drop("_row_idx").collect()
+  /** The demo grid written as a raw CSV file, rows ended by `eol`. */
+  private def demoGridCsv(prefix: String, eol: String): Path = {
+    val rows = PipelineQueries.demoGrid(spark)
+      .orderBy("_row_idx").drop("_row_idx").collect()
     def quote(v: String) = "\"" + v.replace("\"", "\"\"") + "\""
     val csv = rows.map(_.toSeq.map {
       case null => ""
       case s: String if s.contains(",") || s.contains("\n") || s.contains("\"") => quote(s)
       case s => s.toString
-    }.mkString(",")).mkString("\r\n") + "\r\n" // CRLF on purpose
-    val f = Files.createTempFile("grid", ".csv")
+    }.mkString(",")).mkString(eol) + eol
+    val f = Files.createTempFile(prefix, ".csv")
     Files.writeString(f, csv)
+  }
+
+  test("csvGrid round-trips a CRLF grid with embedded-newline headers") {
+    val grid = PipelineQueries.demoGrid(spark)
+    val f = demoGridCsv("grid", "\r\n") // CRLF on purpose
 
     val reread = OrderedScan.csvGrid(spark, f.toString)
     // "" and null are indistinguishable in CSV and equivalent to the
@@ -36,17 +44,36 @@ class RunHomologationSpec extends AnyFunSuite {
     a.zip(b).foreach { case (x, y) => assert(x == y, s"$x != $y") }
   }
 
+  // One run's generated classes (120–140) outnumber Spark's default code
+  // cache (100 entries): at that size the LRU evicts every class before
+  // the next run needs it, and each run compiles them all again. This
+  // test runs before the next one, which drives the same pipeline and
+  // would otherwise warm the cache for its first run.
+  test("a repeated RunHomologation run reuses the first run's generated classes") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftSession.CodegenCacheEntries.toString)
+    val grid = demoGridCsv("grid3", "\n")
+    val dir = Files.createTempDirectory("hom_codegen")
+    val catalog = dir.resolve("catalog.csv")
+    Files.writeString(catalog, Seq(
+      "COD_IMP,NOMBRE_EMP,RUT",
+      "ASTA968612409,Astara Chile SPA,96.861.240-9",
+      "GILD79649140K,Automotores Gildemeister SPA,79.649.140-K").mkString("", "\n", "\n"))
+    def compiles(run: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      graft.pipeline.RunHomologation.main(Array(
+        grid.toString, catalog.toString, dir.resolve(run).toString))
+      assert(Files.isDirectory(dir.resolve(run).resolve("datos3cv_2013-2014.csv")))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles("run1")
+    val second = compiles("run2")
+    info(s"Janino compiles: first run $first, second run $second")
+    assert(second * 10 < first, s"first run compiled $first classes, the second $second")
+  }
+
   test("RunHomologation main publishes the year-ranged CSV and mapping store") {
-    val grid = PipelineQueries.demoGrid(spark)
-    val rows = grid.orderBy("_row_idx").drop("_row_idx").collect()
-    def quote(v: String) = "\"" + v.replace("\"", "\"\"") + "\""
-    val csv = rows.map(_.toSeq.map {
-      case null => ""
-      case s: String if s.contains(",") || s.contains("\n") || s.contains("\"") => quote(s)
-      case s => s.toString
-    }.mkString(",")).mkString("\n") + "\n"
-    val f = Files.createTempFile("grid2", ".csv")
-    Files.writeString(f, csv)
+    val f = demoGridCsv("grid2", "\n")
     val outDir = Files.createTempDirectory("hom_out")
     val mapping = outDir.resolve("mapping.json")
 
