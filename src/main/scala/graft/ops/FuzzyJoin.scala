@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.{GraftFunctions, TextFunctions}
 
 /** J2: fuzzy best-match (similarity top-1) join — the Spark-native form of
@@ -263,14 +265,31 @@ object ImporterStandardizer {
       notFound: DataFrame,
       release: () => Unit = () => ())
 
-  /** catalog schema: COD_IMP, NOMBRE_EMP, RUT (+extra cols ignored). */
+  /** catalog schema: COD_IMP, NOMBRE_EMP, RUT (+extra cols ignored).
+    *
+    * Eager by design, so that later actions on `standardized` never
+    * rebuild the fuzzy lineage: the distinct non-null names of `nameCol`
+    * are collected once, scored against the broadcast catalog as a local
+    * relation, and the resulting name → match mapping is collected once.
+    * `standardized` is `df` left-joined to that mapping as a broadcast
+    * local relation; `notFound` is a local DataFrame of the collected
+    * names without a match.
+    *
+    * Driver bound: both collects hold at most U rows, U = distinct
+    * non-null names. The mapping was broadcast before it was collected,
+    * so it already had to fit on the driver; the name list is the same
+    * size. The left join keeps `df`'s row count, since the mapping has
+    * one row per name. */
   def standardize(
       df: DataFrame,
       catalog: DataFrame,
       threshold: Double = 0.6,
       variant: Variant = Legacy,
       nameCol: String = "IMPORTADOR"): Result = {
-    val names = df.select(nameCol).where(col(nameCol).isNotNull).distinct()
+    val spark = df.sparkSession
+    val distinctNames = df.select(nameCol).where(col(nameCol).isNotNull).distinct()
+    val nameRows = distinctNames.collect().toSeq
+    val names = spark.createDataFrame(nameRows.asJava, distinctNames.schema)
     val cat = FuzzyJoin.withPosition(
       catalog.select("COD_IMP", "NOMBRE_EMP", "RUT"))
     val matched = variant match {
@@ -283,17 +302,21 @@ object ImporterStandardizer {
           scorer = (p, c) => GraftFunctions.similarity_native(
             coalesce(stripJunk(p), lit("")), coalesce(stripJunk(c), lit(""))))
     }
-    val mapping = matched.select(
+    val mappingPlan = matched.select(
       col(nameCol),
       col("NOMBRE_EMP").as("IMPORTADOR_STD"),
       col("RUT"),
       col("COD_IMP").as("IMP_COD"))
+    val mappingRows = mappingPlan.collect().toSeq
+    val mapping = spark.createDataFrame(mappingRows.asJava, mappingPlan.schema)
     // J1: broadcast left enrichment + coalesce-back
     val joined = df.join(broadcast(mapping), Seq(nameCol), "left")
       .withColumn(nameCol, coalesce(col("IMPORTADOR_STD"), col(nameCol)))
       .drop("IMPORTADOR_STD")
-    // not_found = distinct names with no accepted match (left_anti)
-    val notFound = names.join(mapping.select(nameCol), Seq(nameCol), "left_anti")
+    // not_found = distinct names with no accepted match
+    val matchedNames = mappingRows.map(_.get(0)).toSet
+    val notFound = spark.createDataFrame(
+      nameRows.filterNot(r => matchedNames(r.get(0))).asJava, distinctNames.schema)
     Result(joined, notFound)
   }
 

@@ -2,19 +2,23 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{CompatMode, ImporterStandardizer, Stages}
 import graft.schema.{HeaderIdentify, HeaderRules}
 
-/** EP2/EP3: the end-to-end homologation transformation
-  * (/root/reference/src/transform_pipeline.py:218-251 and
-  * /root/reference/src/load_to_gcp.py:64-92) as one lazy DataFrame chain.
+/** EP2/EP3: the end-to-end homologation transformation (the reference's
+  * src/transform_pipeline.py:218-251 and src/load_to_gcp.py:64-92) as one
+  * DataFrame chain.
   *
   * Header identification/standardization is a driver-side pre-pass over
   * the collected ≤10-row prefix (provably tiny); its outputs — the rename
-  * map and `maxrow` — are baked into the plan as literals. Everything
-  * after is pure Catalyst: one scan, no collect, a single tiny agg for
-  * the imputation means, and a broadcast join for importers.
+  * map and `maxrow` — are baked into the plan as literals. The stages
+  * after it are pure Catalyst over one parse of the grid (persisted when
+  * `cache=true`). Three more bounded driver collects build the plan:
+  * the imputation means (one row), then the distinct importer names and
+  * their best catalog match (≤ one row per distinct name each); the
+  * importer join is a broadcast of that collected mapping.
   */
 object Homologation {
 
@@ -66,20 +70,28 @@ object Homologation {
   /** pipeline_transformation (transform_pipeline.py:218-251). `catalog`
     * is the importer master table (bd-importadores).
     *
-    * `cache=true` persists the staged table so the imputation-mean agg
-    * and the caller's terminal action share one computation of the
-    * header+transform chain; the cache is owned by the returned
-    * `Result.release()` — call it after the terminal action (cached
-    * blocks otherwise accumulate across grids in a long-lived session).
-    * `cache=false` skips the persist entirely (right for tiny demo grids
-    * and for one-shot runs where recompute beats disk-backed caching). */
+    * `cache=true` persists two tables, both `MEMORY_AND_DISK`: the raw
+    * `grid`, so header identification and the stage chain parse the
+    * source once, and the staged table, so the imputation-mean agg, the
+    * importer-name collect and the caller's terminal actions share one
+    * computation of the header+transform chain. Both caches are owned by
+    * the returned `Result.release()` — call it after the terminal action
+    * (cached blocks otherwise accumulate across grids in a long-lived
+    * session). `cache=false` persists nothing (right for tiny demo grids
+    * and for one-shot runs where recompute beats disk-backed caching).
+    *
+    * Driver collects made while building the result: the header prefix
+    * (≤ `HeaderIdentify.MaxScan` rows), the imputation means (one row),
+    * and in [[ImporterStandardizer.standardize]] the distinct importer
+    * names and their mapping (≤ one row per distinct name each). */
   def pipeline(
       grid: DataFrame,
       rules: HeaderRules,
       catalog: DataFrame,
       mode: CompatMode = CompatMode.Reference,
       cache: Boolean = true): ImporterStandardizer.Result = {
-    val chain = transformHeaders(grid, rules)
+    val raw = if (cache) grid.persist(StorageLevel.MEMORY_AND_DISK) else grid
+    val chain = transformHeaders(raw, rules)
       .transform(Stages.transformDatetime(_))
       .transform(Stages.transformCategoryCols(_, categoryColumns))
       .transform(Stages.transformCombustible(_))
@@ -89,12 +101,10 @@ object Homologation {
       .transform(Stages.rendEquiv(_, mode = mode))
       .transform(Stages.co2Equiv(_))
       .transform(Stages.gasesEmissions(_))
-    val staged =
-      if (cache) chain.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else chain
+    val staged = if (cache) chain.persist(StorageLevel.MEMORY_AND_DISK) else chain
     val df = Stages.bevZeroAndImpute(staged)
     val r = ImporterStandardizer.standardize(df, catalog)
-    if (cache) r.copy(release = () => { staged.unpersist(); () }) else r
+    if (cache) r.copy(release = () => { staged.unpersist(); raw.unpersist(); () }) else r
   }
 
   /** EP3 publish projection: present published columns only, in order

@@ -2,6 +2,9 @@ package graft.pipeline
 
 import java.nio.file.Paths
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, count, lit, max, min}
+
 import graft.engine.GraftSession
 import graft.ops.CompatMode
 import graft.schema.{HeaderRules, MappingStore}
@@ -26,11 +29,12 @@ object RunHomologation {
       case Some("intended") => CompatMode.Intended
       case _                => CompatMode.Reference
     }
-    // reuse an already-running session (tests, notebooks) and only own
-    // the shutdown when we created it
-    val preExisting = org.apache.spark.sql.SparkSession.getDefaultSession.isDefined
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "homologation")
+    // reuse an already-running session (tests, notebooks) with only the
+    // engine's required confs applied, and own the session (and its
+    // shutdown) only when none exists
+    val existing = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val spark = existing.map(GraftSession.tune).getOrElse(GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "homologation"))
 
     val rules = new HeaderRules(mode = mode)
     mappingJson.map(Paths.get(_)).filter(java.nio.file.Files.exists(_))
@@ -41,7 +45,11 @@ object RunHomologation {
     val result = Homologation.pipeline(grid, rules, catalog, mode)
 
     val published = Homologation.publishProjection(result.standardized)
-    val (y0, y1) = Homologation.yearRange(result.standardized)
+    // year range and row count in one job (the importer left join keeps
+    // the staged row count, so this equals published's count)
+    val stats = result.standardized
+      .agg(min(col("AÑO")), max(col("AÑO")), count(lit(1))).first()
+    val (y0, y1, rows) = (stats.getInt(0), stats.getInt(1), stats.getLong(2))
     val outPath = s"$outDir/datos3cv_${y0}-${y1}.csv"
     OrderedScan.writeSingleCsv(published, outPath)
 
@@ -53,8 +61,8 @@ object RunHomologation {
       System.err.println(s"[homologation] ${notFound.length} importer(s) not matched:")
       notFound.foreach(n => System.err.println(s"  - $n"))
     }
-    println(s"""{"published":"$outPath","rows":${published.count()},"years":[$y0,$y1],"importers_not_found":${notFound.length}}""")
-    result.release() // free the pipeline's staging cache (terminal actions done)
-    if (!preExisting) spark.stop()
+    println(s"""{"published":"$outPath","rows":$rows,"years":[$y0,$y1],"importers_not_found":${notFound.length}}""")
+    result.release() // free the pipeline's caches (terminal actions done)
+    if (existing.isEmpty) spark.stop()
   }
 }

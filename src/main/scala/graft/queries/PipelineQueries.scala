@@ -8,7 +8,7 @@ import graft.engine.Tables
 import graft.ops.{Ann, Dedup, ImporterStandardizer, Multimodal, TextAnalysis}
 import graft.pipeline.Homologation
 import graft.schema.HeaderRules
-import graft.sources.OrderedScan
+import graft.sources.{OrderedScan, ReferenceData}
 import graft.streaming.EventsStream
 
 /** Queries exercising the homologation pipeline and (see DedupQueries /
@@ -290,7 +290,7 @@ object PipelineQueries {
     // HomologationSpec) — a content gate, not a row count.
     "p01_hom_pipeline" -> ((s, _) => {
       val catalog = OrderedScan.csvCatalog(
-        s, "/root/reference/data/processed/bd-importadores.csv")
+        s, ReferenceData.importerCatalog)
       val r: ImporterStandardizer.Result =
         Homologation.pipeline(demoGrid(s), new HeaderRules(), catalog,
           cache = false) // 3-row demo: persist setup costs more than recompute
@@ -3011,7 +3011,7 @@ object PipelineQueries {
     // overwrite). Rows-only; divergence from p01 is exactly the quirk set.
     "p18_hom_pipeline_intended" -> ((s, _) => {
       val catalog = OrderedScan.csvCatalog(
-        s, "/root/reference/data/processed/bd-importadores.csv")
+        s, ReferenceData.importerCatalog)
       val r = Homologation.pipeline(demoGrid(s), new HeaderRules(),
         catalog, mode = graft.ops.CompatMode.Intended, cache = false)
       Homologation.publishProjection(r.standardized).orderBy("MARCA")

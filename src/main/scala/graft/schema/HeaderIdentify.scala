@@ -98,7 +98,9 @@ object HeaderIdentify {
 
   /** Collect the scan prefix of a raw all-string grid DataFrame that
     * carries `_row_idx`, and identify its headers. The collect is bounded:
-    * maxScan rows × grid width. */
+    * maxScan rows × grid width. It carries `orderCol` and the ≤ maxScan
+    * rows are sorted on the driver, so the prefix costs one job (a
+    * distributed `orderBy` would add a range-sampling and a shuffle job). */
   def identifyGrid(
       grid: DataFrame,
       orderCol: String = "_row_idx",
@@ -106,10 +108,10 @@ object HeaderIdentify {
     val dataCols = grid.columns.filterNot(_ == orderCol)
     val prefix = grid
       .where(col(orderCol) < maxScan)
-      .orderBy(orderCol)
-      .select(dataCols.map(col).toSeq: _*)
+      .select(col(orderCol).cast("long") +: dataCols.map(col).toSeq: _*)
       .collect()
-      .map(r => dataCols.indices.map(i => if (r.isNullAt(i)) null else r.getString(i)).toSeq)
+      .sortBy(_.getLong(0))
+      .map(r => dataCols.indices.map(i => if (r.isNullAt(i + 1)) null else r.getString(i + 1)).toSeq)
       .toSeq
     identify(prefix, maxScan)
   }

@@ -59,9 +59,11 @@ object OrderedScan {
     attachRowIndex(cleaned)
   }
 
-  /** S4: catalog CSV with header + explicit schema honoring. */
+  /** S4: catalog CSV with header + explicit schema honoring. Lines that
+    * start with `#` are comments (the vendored fixture's provenance note;
+    * see [[ReferenceData]]). */
   def csvCatalog(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read.option("header", "true")
+    val r = spark.read.option("header", "true").option("comment", "#")
     schema.map(r.schema).getOrElse(r.option("inferSchema", "true")).csv(path)
   }
 

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Homologation
 import graft.schema.HeaderRules
-import graft.sources.OrderedScan
+import graft.sources.{OrderedScan, ReferenceData}
 
 /** EP2/EP3 end-to-end: a reference-shaped raw grid (multi-row header
   * hierarchy + all-string cells + '-' sentinels) through the full
@@ -41,7 +41,7 @@ class HomologationSpec extends AnyFunSuite {
     val grid = OrderedScan.fromGrid(spark, rawGrid, 12)
     val rules = new HeaderRules()
     val catalog = OrderedScan.csvCatalog(
-      spark, "/root/reference/data/processed/bd-importadores.csv")
+      spark, ReferenceData.importerCatalog)
     val result = Homologation.pipeline(grid, rules, catalog)
     val df = result.standardized.orderBy("_row_idx").cache()
 
@@ -100,18 +100,22 @@ class HomologationSpec extends AnyFunSuite {
     result.release()
   }
 
-  test("Result.release() frees the staging cache; cache=false never persists") {
+  test("Result.release() frees the grid and staging caches; cache=false never persists") {
+    import spark.implicits._
     // distinct grid (extra data row) so the CacheManager can't alias this
     // plan to one cached by another test
     val grid = OrderedScan.fromGrid(spark, rawGrid :+
       Seq("FORD", "FOCUS", "Astara. Chile - SPA", "Combustión", "GASOLINA",
         "2015-02-02", "1400", "14.0", "-", "130", "0.4", N), 12)
-    val catalog = OrderedScan.csvCatalog(
-      spark, "/root/reference/data/processed/bd-importadores.csv")
+    val catalog = Seq(
+      ("ASTA968612409", "Astara Chile SPA", "96.861.240-9"),
+      ("GILD79649140K", "Automotores Gildemeister SPA", "79.649.140-K"))
+      .toDF("COD_IMP", "NOMBRE_EMP", "RUT")
     val before = spark.sparkContext.getPersistentRDDs.size
     val result = Homologation.pipeline(grid, new HeaderRules(), catalog)
     assert(result.standardized.count() == 4)
-    assert(spark.sparkContext.getPersistentRDDs.size > before, "staged table should be cached")
+    assert(spark.sparkContext.getPersistentRDDs.size == before + 2,
+      "the raw grid and the staged table should both be cached")
     result.release()
     assert(spark.sparkContext.getPersistentRDDs.size == before, "release must unpersist")
 

@@ -3,16 +3,17 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ImporterStandardizer
-import graft.sources.OrderedScan
+import graft.sources.{OrderedScan, ReferenceData}
 
-/** J1/J2/F14/F15: fuzzy importer standardization against the real master
-  * catalog (/root/reference/data/processed/bd-importadores.csv). */
+/** J1/J2/F14/F15: fuzzy importer standardization against the importer
+  * master catalog that [[ReferenceData]] resolves (by default the vendored
+  * 3-row partial reconstruction). */
 class ImporterStandardizerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private lazy val catalog = OrderedScan.csvCatalog(
-    spark, "/root/reference/data/processed/bd-importadores.csv")
+    spark, ReferenceData.importerCatalog)
 
   test("exact, junk-variant, and garbage names standardize as expected") {
     val df = Seq(
@@ -79,6 +80,50 @@ class ImporterStandardizerSpec extends AnyFunSuite {
     assert(u.count() == 3)
     assert(u.where("_sheet = 1").count() == 2)
     assert(u.columns.contains("_row_idx"))
+  }
+
+  test("standardize equals the lazy left-join / left-anti formulation") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.functions.GraftFunctions
+    import graft.ops.FuzzyJoin
+    // the fully lazy formulation: every action re-runs the fuzzy match
+    def lazyStandardize(df: DataFrame): (DataFrame, DataFrame) = {
+      val names = df.select("IMPORTADOR").where(col("IMPORTADOR").isNotNull).distinct()
+      val cat = FuzzyJoin.withPosition(catalog.select("COD_IMP", "NOMBRE_EMP", "RUT"))
+      def strip(c: org.apache.spark.sql.Column) =
+        coalesce(regexp_replace(c, "[\\t\\. \\-]+", ""), lit(""))
+      val mapping = FuzzyJoin.bestMatch(names, "IMPORTADOR", cat, "NOMBRE_EMP",
+          0.6, inclusive = false,
+          scorer = (p, c) => GraftFunctions.similarity_native(strip(p), strip(c)))
+        .select(col("IMPORTADOR"), col("NOMBRE_EMP").as("IMPORTADOR_STD"),
+          col("RUT"), col("COD_IMP").as("IMP_COD"))
+      val joined = df.join(broadcast(mapping), Seq("IMPORTADOR"), "left")
+        .withColumn("IMPORTADOR", coalesce(col("IMPORTADOR_STD"), col("IMPORTADOR")))
+        .drop("IMPORTADOR_STD")
+      (joined, names.join(mapping.select("IMPORTADOR"), Seq("IMPORTADOR"), "left_anti"))
+    }
+    def sortedRows(d: DataFrame) = d.collect().map(_.toSeq.map(String.valueOf)).toSeq
+      .sortBy(_.mkString("\u0001"))
+    val cases = Seq(
+      Seq[(String, Int)](
+        (null, 1),                          // null name: kept, no match
+        ("Astara. Chile - SPA", 2),         // duplicate rows of one name
+        ("Astara. Chile - SPA", 3),
+        ("BYD  Chile\tSPA", 4),
+        ("Automotores  Gildemeister spa.", 5),
+        ("zzzz qqqq vvvv", 6),              // unmatched name
+        ("zzzz qqqq vvvv", 7)),
+      Seq.empty[(String, Int)])             // empty input frame
+    cases.foreach { rows =>
+      val df = rows.toDF("IMPORTADOR", "id")
+      val r = ImporterStandardizer.standardize(df, catalog)
+      val (wantStd, wantNf) = lazyStandardize(df)
+      assert(r.standardized.columns.toSeq == wantStd.columns.toSeq)
+      assert(sortedRows(r.standardized) == sortedRows(wantStd))
+      assert(sortedRows(r.notFound) == sortedRows(wantNf))
+      assert(r.standardized.count() == rows.size)
+    }
   }
 
   test("plan uses broadcast joins, not a shuffled fact join") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.GraftSession
 import graft.queries.PipelineQueries
-import graft.sources.OrderedScan
+import graft.sources.{OrderedScan, ReferenceData}
 
 /** The runnable EP2+EP3 CLI driven through a CSV round-trip, including
   * the CRLF hazard (python csv writers emit \r\n; the multiLine parser
@@ -16,10 +16,12 @@ import graft.sources.OrderedScan
 class RunHomologationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  /** The demo grid written as a raw CSV file, rows ended by `eol`. */
-  private def demoGridCsv(prefix: String, eol: String): Path = {
-    val rows = PipelineQueries.demoGrid(spark)
+  /** The demo grid written as a raw CSV file, rows ended by `eol`, its
+    * three data rows repeated `copies` times below the header block. */
+  private def demoGridCsv(prefix: String, eol: String, copies: Int = 1): Path = {
+    val all = PipelineQueries.demoGrid(spark)
       .orderBy("_row_idx").drop("_row_idx").collect()
+    val rows = all.take(3) ++ Seq.fill(copies)(all.drop(3)).flatten
     def quote(v: String) = "\"" + v.replace("\"", "\"\"") + "\""
     val csv = rows.map(_.toSeq.map {
       case null => ""
@@ -29,6 +31,15 @@ class RunHomologationSpec extends AnyFunSuite {
     val f = Files.createTempFile(prefix, ".csv")
     Files.writeString(f, csv)
   }
+
+  /** A two-row importer catalog from spec literals, written to `dir`. */
+  private def inlineCatalog(dir: Path): Path =
+    Files.writeString(dir.resolve("catalog.csv"), inlineCatalogLines.mkString("", "\n", "\n"))
+
+  private val inlineCatalogLines = Seq(
+    "COD_IMP,NOMBRE_EMP,RUT",
+    "ASTA968612409,Astara Chile SPA,96.861.240-9",
+    "GILD79649140K,Automotores Gildemeister SPA,79.649.140-K")
 
   test("csvGrid round-trips a CRLF grid with embedded-newline headers") {
     val grid = PipelineQueries.demoGrid(spark)
@@ -54,11 +65,7 @@ class RunHomologationSpec extends AnyFunSuite {
       GraftSession.CodegenCacheEntries.toString)
     val grid = demoGridCsv("grid3", "\n")
     val dir = Files.createTempDirectory("hom_codegen")
-    val catalog = dir.resolve("catalog.csv")
-    Files.writeString(catalog, Seq(
-      "COD_IMP,NOMBRE_EMP,RUT",
-      "ASTA968612409,Astara Chile SPA,96.861.240-9",
-      "GILD79649140K,Automotores Gildemeister SPA,79.649.140-K").mkString("", "\n", "\n"))
+    val catalog = inlineCatalog(dir)
     def compiles(run: String): Long = {
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       graft.pipeline.RunHomologation.main(Array(
@@ -78,7 +85,7 @@ class RunHomologationSpec extends AnyFunSuite {
     val mapping = outDir.resolve("mapping.json")
 
     graft.pipeline.RunHomologation.main(Array(
-      f.toString, "/root/reference/data/processed/bd-importadores.csv",
+      f.toString, ReferenceData.importerCatalog,
       outDir.toString, mapping.toString))
 
     val published = outDir.resolve("datos3cv_2013-2014.csv")
@@ -89,5 +96,76 @@ class RunHomologationSpec extends AnyFunSuite {
     assert(lines.length == 4) // header + 3 rows
     assert(lines.head.startsWith("MARCA,MODELO,FECHA_HOML"))
     assert(Files.exists(mapping))
+  }
+
+  // One run's Spark jobs and the input records its tasks read. The grid
+  // is parsed once (it is persisted before header identification), the
+  // importer lineage is collected once instead of being rebuilt by every
+  // later action, and the year range and row count share one agg. Input
+  // records also count CSV schema inference, the catalog's reads and one
+  // record per cached batch read, so the grid is made large enough
+  // (303 records) that a second parse would show above all of those.
+  test("a RunHomologation run reads the grid once and fires a bounded number of jobs") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler._
+    val copies = 100
+    val grid = demoGridCsv("grid4", "\n", copies)
+    val gridRecords = 3 + 3 * copies // header block + data rows
+    val dir = Files.createTempDirectory("hom_jobs")
+    val catalog = inlineCatalog(dir)
+    val group = "hom-jobs-probe"
+    val jobs = new AtomicLong
+    val records = new AtomicLong
+    val flushed = new CountDownLatch(1)
+    val stages = ConcurrentHashMap.newKeySet[Int]()
+    def inGroup(p: java.util.Properties, g: String) =
+      Option(p).exists(_.getProperty("spark.jobGroup.id") == g)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        if (inGroup(j.properties, group)) {
+          jobs.incrementAndGet(); j.stageIds.foreach(stages.add)
+        }
+        if (inGroup(j.properties, group + "-flush")) flushed.countDown()
+      }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, "RunHomologation probe")
+      graft.pipeline.RunHomologation.main(Array(
+        grid.toString, catalog.toString, dir.resolve("out").toString))
+      // flush marker: the listener bus is FIFO, so once this job's start
+      // lands every event of the run before it has been delivered
+      spark.sparkContext.setJobGroup(group + "-flush", "flush")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(l)
+    }
+    info(s"jobs ${jobs.get}, input records ${records.get} (grid $gridRecords)")
+    assert(jobs.get <= MaxJobs, s"${jobs.get} jobs, pinned at most $MaxJobs")
+    assert(records.get >= gridRecords && records.get < 2 * gridRecords,
+      s"read ${records.get} input records; one parse of the grid is $gridRecords")
+  }
+
+  /** Jobs of one RunHomologation run on the demo grid, as measured. */
+  private val MaxJobs = 26
+
+  test("RunHomologation inside a running session leaves its confs alone") {
+    val key = "spark.sql.shuffle.partitions"
+    val old = spark.conf.get(key)
+    val dir = Files.createTempDirectory("hom_session")
+    try {
+      spark.conf.set(key, "3")
+      graft.pipeline.RunHomologation.main(Array(
+        demoGridCsv("grid5", "\n").toString, inlineCatalog(dir).toString,
+        dir.resolve("out").toString))
+      assert(spark.conf.get(key) == "3")
+      assert(!spark.sparkContext.isStopped)
+    } finally spark.conf.set(key, old)
   }
 }

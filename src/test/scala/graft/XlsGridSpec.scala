@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Homologation
 import graft.queries.PipelineQueries
 import graft.schema.HeaderRules
-import graft.sources.{OrderedScan, XlsGrid}
+import graft.sources.{OrderedScan, ReferenceData, XlsGrid}
 
 /** BIFF8 workbook ingestion ([[XlsGrid]]): the committed fixtures pin
   * both CFB stream paths (ministream below the 4096 cutoff, regular FAT
@@ -67,7 +67,7 @@ class XlsGridSpec extends AnyFunSuite {
   test("the binary workbook flows through the p01 pipeline unchanged") {
     val rules = new HeaderRules()
     val catalog = OrderedScan.csvCatalog(
-      spark, "/root/reference/data/processed/bd-importadores.csv")
+      spark, ReferenceData.importerCatalog)
     val fromXls = Homologation.publishProjection(
       Homologation.pipeline(OrderedScan.xlsSheets(spark, small).head,
         rules, catalog, cache = false).standardized)

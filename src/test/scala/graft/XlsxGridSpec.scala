@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Homologation
 import graft.schema.HeaderRules
-import graft.sources.{OrderedScan, XlsGrid, XlsxGrid}
+import graft.sources.{OrderedScan, ReferenceData, XlsGrid, XlsxGrid}
 
 /** OOXML workbook ingestion ([[XlsxGrid]]): the committed fixture's
   * sheets "2013"/"2014" hold the SAME content as fixture_3cv.xls, so the
@@ -43,7 +43,7 @@ class XlsxGridSpec extends AnyFunSuite {
   test("the zip workbook flows through the p01 pipeline identically to the .xls") {
     val rules = new HeaderRules()
     val catalog = OrderedScan.csvCatalog(
-      spark, "/root/reference/data/processed/bd-importadores.csv")
+      spark, ReferenceData.importerCatalog)
     def publish(path: String) = Homologation.publishProjection(
       Homologation.pipeline(OrderedScan.xlsSheets(spark, path).head,
         rules, catalog, cache = false).standardized)
