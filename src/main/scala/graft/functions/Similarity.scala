@@ -82,13 +82,6 @@ object Similarity {
     2.0 * matchCount(ca, cb, 0, ca.length, 0, cb.length) / total
   }
 
-  /** Variant of [[ratio]] that first drops the reference's junk chars
-    * (space, tab, dot, dash — /root/reference/src/importer_standarizer.py:167). */
-  def ratioIgnoringJunk(a: String, b: String): Double = {
-    def strip(s: String) = if (s == null) null else s.filterNot(c => c == ' ' || c == '\t' || c == '.' || c == '-')
-    ratio(strip(a), strip(b))
-  }
-
   val similarityUdf = udf(ratio _)
 
   def similarity_ratio(a: Column, b: Column): Column = similarityUdf(a, b)

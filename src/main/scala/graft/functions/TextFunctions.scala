@@ -20,15 +20,10 @@ object TextFunctions {
       .replaceAll("\\p{M}", "")
   }
 
-  private val unaccentUdf = udf(unaccentStr _)
-
   /** Column fast-path: `translate` handles the full Spanish accent set
-    * without leaving whole-stage codegen; the UDF form exists for exotic
-    * input (use [[unaccent]] unless profiling says otherwise). */
+    * without leaving whole-stage codegen. */
   def unaccent(c: Column): Column =
     translate(c, "áéíóúüñÁÉÍÓÚÜÑ", "aeiouunAEIOUUN")
-
-  def unaccentFull(c: Column): Column = unaccentUdf(c)
 
   /** Reference category normalization: str → lower → unaccent → trim
     * (transform_pipeline.py:63-65). */

@@ -1467,11 +1467,6 @@ object ExifMetaExpression {
     (0, -1, 0)
   }
 
-  /** Orientation (tag 274) alone from a bare TIFF at [base, end), or
-    * -1 — the slice entry point the WebP EXIF-chunk walk uses. */
-  def tiffOrientation(b: Array[Byte], base: Int, end: Int): Int =
-    tiffIfd0(b, base, end)._2
-
   /** The WebP arm of [[scan]]: RIFF chunk walk to fourcc `EXIF`,
     * optional `Exif\0\0` prefix skipped (both layouts occur in the
     * wild), then the same bounded TIFF IFD0 read. */

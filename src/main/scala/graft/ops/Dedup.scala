@@ -89,18 +89,6 @@ object Dedup {
       .select(col(idCol),
         graft.functions.ShingleFunctions.word_shingles(col("_toks"), n).as("_sh"))
 
-  def minHashNearDups(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      shingleSize: Int = 3,
-      jaccardThreshold: Double = 0.8): DataFrame =
-    minHashNearDupsShingled(
-      withCharShingles(df, idCol, textCol, shingleSize),
-      idCol, numHashes, bands, jaccardThreshold)
-
   /** Word-shingle variant — far more discriminative on shared-vocabulary
     * corpora than char n-grams (measured cross-doc max ≈ 0.02 vs 0.68 on
     * the synthetic fixture). */

@@ -19,9 +19,12 @@ object CompatMode {
   * `DataFrame => DataFrame` stages, composable with `df.transform(...)`.
   * Each stage mirrors a function in
   * /root/reference/src/transform_pipeline.py (cited per stage) but is
-  * expressed as lazy Catalyst expressions: constant-foldable CASE trees,
-  * coerce-to-null casts, and window-based forward fill — no row-at-a-time
-  * code, so the whole layer stays inside whole-stage codegen.
+  * expressed as lazy Catalyst expressions: constant-foldable CASE trees
+  * and coerce-to-null casts, so those stages stay inside whole-stage
+  * codegen. The one order-dependent step, the forward fill in
+  * [[fillSentinels]], is [[Ffill.ffill]]: over scan-ordered input a
+  * per-partition pass seeded by a ≤ #partitions-row preview, else a
+  * partition-parallel blocked window fill.
   */
 object Stages {
 
@@ -38,33 +41,50 @@ object Stages {
   private def tryDoubleOf(name: String): Column =
     nullif(col(name), lit("-")).try_cast("double")
 
+  /** The fill half of transform_datetime and transform_pbv
+    * (transform_pipeline.py:38-39,50-51): `'-'`→NULL in each of `columns`,
+    * then one forward fill of all of them over file order. Requires
+    * `orderCol` (the explicit row index threaded from the scan — SURVEY
+    * §4); over a scan-ordered input the fill needs no shuffle (see
+    * [[Ffill]]). */
+  def fillSentinels(
+      df: DataFrame,
+      columns: Seq[String],
+      orderCol: String = "_row_idx"): DataFrame =
+    Ffill.ffill(
+      df.withColumns(columns.map(c => c -> sentinelToNull(col(c))).toMap),
+      orderCol, columns)
+
+  /** The derive half of transform_datetime (transform_pipeline.py:40-43):
+    * cast to timestamp, derive AÑO. */
+  def deriveDatetime(
+      df: DataFrame,
+      column: String = "FECHA_HOML",
+      yearCol: String = "AÑO"): DataFrame =
+    df.withColumn(column, to_timestamp(col(column)))
+      .withColumn(yearCol, year(col(column)))
+
+  /** The derive half of transform_pbv (transform_pipeline.py:52): to
+    * numeric. */
+  def derivePbv(df: DataFrame, column: String = "PESO_BRUTO_VH_KG"): DataFrame =
+    df.withColumn(column, tryDouble(col(column)))
+
   /** transform_datetime (transform_pipeline.py:34-43): `'-'`→NULL, ffill
-    * over file order, cast to date, derive AÑO. Requires `orderCol` (the
-    * explicit row index threaded from the scan — SURVEY §4). */
+    * over file order, cast to date, derive AÑO. */
   def transformDatetime(
       df: DataFrame,
       column: String = "FECHA_HOML",
       yearCol: String = "AÑO",
-      orderCol: String = "_row_idx"): DataFrame = {
-    val filled = Ffill.ffill(
-      df.withColumn(column, sentinelToNull(col(column))),
-      orderCol, Seq(column))
-    filled
-      .withColumn(column, to_timestamp(col(column)))
-      .withColumn(yearCol, year(col(column)))
-  }
+      orderCol: String = "_row_idx"): DataFrame =
+    deriveDatetime(fillSentinels(df, Seq(column), orderCol), column, yearCol)
 
   /** transform_pbv (transform_pipeline.py:46-53): `'-'`→NULL, ffill, to
     * numeric. */
   def transformPbv(
       df: DataFrame,
       column: String = "PESO_BRUTO_VH_KG",
-      orderCol: String = "_row_idx"): DataFrame = {
-    val filled = Ffill.ffill(
-      df.withColumn(column, sentinelToNull(col(column))),
-      orderCol, Seq(column))
-    filled.withColumn(column, tryDouble(col(column)))
-  }
+      orderCol: String = "_row_idx"): DataFrame =
+    derivePbv(fillSentinels(df, Seq(column), orderCol), column)
 
   /** Replace `targets` in place via one `select` projection. A
     * per-column `withColumn` fold adds one Project (and one full
@@ -281,12 +301,5 @@ object Stages {
       else zeroed.withColumn(co2Col, coalesce(col(co2Col), lit(row.getDouble(0))))
     if (row.isNullAt(1)) d2
     else d2.withColumn(rendCol, coalesce(col(rendCol), lit(row.getDouble(1))))
-  }
-
-  /** A1 as a standalone reusable stage: impute NULLs with round(mean, 2). */
-  def meanImpute(df: DataFrame, column: String, scale: Int = 2): DataFrame = {
-    val row = df.agg(round(avg(col(column)), scale)).first()
-    if (row.isNullAt(0)) df
-    else df.na.fill(row.getDouble(0), Seq(column))
   }
 }

@@ -14,11 +14,12 @@ import graft.schema.{HeaderIdentify, HeaderRules}
   * Header identification/standardization is a driver-side pre-pass over
   * the collected ≤10-row prefix (provably tiny); its outputs — the rename
   * map and `maxrow` — are baked into the plan as literals. The stages
-  * after it are pure Catalyst over one parse of the grid (persisted when
-  * `cache=true`). Three more bounded driver collects build the plan:
-  * the imputation means (one row), then the distinct importer names and
-  * their best catalog match (≤ one row per distinct name each); the
-  * importer join is a broadcast of that collected mapping.
+  * after it run over one parse of the grid (persisted when `cache=true`):
+  * one narrow forward-fill pass, then pure Catalyst. Four more bounded
+  * driver collects build the plan: the forward fill's per-partition
+  * preview, the imputation means (one row), then the distinct importer
+  * names and their best catalog match (≤ one row per distinct name
+  * each); the importer join is a broadcast of that collected mapping.
   */
 object Homologation {
 
@@ -81,9 +82,11 @@ object Homologation {
     * and for one-shot runs where recompute beats disk-backed caching).
     *
     * Driver collects made while building the result: the header prefix
-    * (≤ `HeaderIdentify.MaxScan` rows), the imputation means (one row),
-    * and in [[ImporterStandardizer.standardize]] the distinct importer
-    * names and their mapping (≤ one row per distinct name each). */
+    * (≤ `HeaderIdentify.MaxScan` rows), the forward fill's preview (≤ one
+    * row per partition; see [[graft.ops.Ffill.ffillScanOrdered]]), the
+    * imputation means (one row), and in
+    * [[ImporterStandardizer.standardize]] the distinct importer names and
+    * their mapping (≤ one row per distinct name each). */
   def pipeline(
       grid: DataFrame,
       rules: HeaderRules,
@@ -91,12 +94,15 @@ object Homologation {
       mode: CompatMode = CompatMode.Reference,
       cache: Boolean = true): ImporterStandardizer.Result = {
     val raw = if (cache) grid.persist(StorageLevel.MEMORY_AND_DISK) else grid
+    // both '-' columns filled in one pass; the stages in between touch
+    // neither, so this equals transformDatetime ... transformPbv
     val chain = transformHeaders(raw, rules)
-      .transform(Stages.transformDatetime(_))
+      .transform(Stages.fillSentinels(_, Seq("FECHA_HOML", "PESO_BRUTO_VH_KG")))
+      .transform(Stages.deriveDatetime(_))
       .transform(Stages.transformCategoryCols(_, categoryColumns))
       .transform(Stages.transformCombustible(_))
       .transform(Stages.transformCategoria(_))
-      .transform(Stages.transformPbv(_))
+      .transform(Stages.derivePbv(_))
       .transform(Stages.transformTipoLdv(_))
       .transform(Stages.rendEquiv(_, mode = mode))
       .transform(Stages.co2Equiv(_))

@@ -1,10 +1,20 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Ffill
+import graft.ops.{Ffill, Stages}
 
-/** W1: forward-fill semantics + blocked-fill equivalence. */
+/** W1: forward-fill semantics + scan-ordered and blocked fill
+  * equivalence. */
 class FfillSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -21,6 +31,80 @@ class FfillSpec extends AnyFunSuite {
     val blocked = Ffill.ffillBlocked(df, "idx", Seq("v"), blockSize = 256)
       .orderBy("idx").collect().map(_.toSeq)
     assert(global.sameElements(blocked))
+  }
+
+  test("input that is not partition-ordered takes the blocked fallback") {
+    val df = data(5000, 13) // repartition(7): partition ranges interleave
+    assert(Ffill.ffillScanOrdered(df, "idx", Seq("v")).isEmpty)
+    val out = Ffill.ffill(df, "idx", Seq("v"))
+    assert(out.queryExecution.sparkPlan.exists(_.isInstanceOf[WindowExec]),
+      "the fallback is the blocked window fill")
+    val global = Ffill.ffillGlobalWindow(df, "idx", Seq("v"))
+      .orderBy("idx").collect().map(_.toSeq)
+    assert(global.sameElements(out.orderBy("idx").collect().map(_.toSeq)))
+  }
+
+  // A grid in scan order: `parts(p)` is partition p's rows, some of them
+  // empty; `_row_idx` ascends across partitions with gaps (like the
+  // header slice leaves); cells are dates, weights, '-' and nulls.
+  private val schema = StructType(Seq(
+    StructField("_row_idx", LongType, nullable = false),
+    StructField("FECHA_HOML", StringType), StructField("PESO_BRUTO_VH_KG", StringType),
+    StructField("MARCA", StringType)))
+
+  private def scanOrdered(parts: Seq[Seq[(String, String)]], gaps: Seq[Int]): DataFrame = {
+    val starts = parts.map(_.size).scanLeft(0)(_ + _)
+    val idx = gaps.take(starts.last).scanLeft(0L)(_ + _).tail
+    val rows = parts.indices.map(p => parts(p).indices.map { i =>
+      val (f, w) = parts(p)(i)
+      Row(idx(starts(p) + i), f, w, s"m${starts(p) + i}")
+    })
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.indices, rows.size).flatMap(rows), schema)
+  }
+
+  private def cell(vals: Seq[String]) =
+    Gen.frequency(4 -> Gen.const("-"), 1 -> Gen.const(null: String), 3 -> Gen.oneOf(vals))
+  private val gridGen = for {
+    nParts <- Gen.choose(1, 6)
+    parts <- Gen.listOfN(nParts, Gen.frequency(1 -> Gen.const(0), 3 -> Gen.choose(1, 12))
+      .flatMap(n => Gen.listOfN(n, Gen.zip(
+        cell(Seq("2013-01-04", "2014-06-10", "2015-02-02")), cell(Seq("1500", "2000", "x"))))))
+    gaps <- Gen.listOfN(parts.map(_.size).sum, Gen.frequency(4 -> Gen.const(1), 1 -> Gen.choose(2, 5)))
+  } yield (parts, gaps)
+
+  test("property: the fused scan-ordered fill equals the global window and the per-column chain") {
+    val both = Seq("FECHA_HOML", "PESO_BRUTO_VH_KG")
+    def rows(df: DataFrame) = df.orderBy("_row_idx").collect().map(_.toSeq).toSeq
+    def derive(df: DataFrame) = Stages.derivePbv(Stages.deriveDatetime(df))
+    val prop = Prop.forAllNoShrink(gridGen) { case (parts, gaps) =>
+      val df = scanOrdered(parts, gaps)
+      val nulled = df.withColumns(both.map(c => c -> Stages.sentinelToNull(col(c))).toMap)
+      val fill = Ffill.ffillScanOrdered(nulled, "_row_idx", both)
+      val global = Ffill.ffillGlobalWindow(nulled, "_row_idx", both)
+      val fused = derive(Stages.fillSentinels(df, both))
+      val perColumn = Stages.transformPbv(Stages.transformDatetime(df))
+      val blocked = derive(Ffill.ffillBlocked(nulled, "_row_idx", both, blockSize = 3))
+      val expected = rows(derive(global))
+      fill.isDefined && rows(fill.get) == rows(global) &&
+        rows(fused) == expected && rows(perColumn) == expected && rows(blocked) == expected
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(25).withInitialSeed(Seed(20261019L)), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("the scan-ordered fill fails loudly when the order changes after the preview") {
+    FfillSpec.calls.set(0)
+    // the first evaluation (the preview) sees idx 0..3, later ones 1..4
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+      val shift = if (FfillSpec.calls.getAndIncrement() == 0) 0L else 1L
+      (0L until 4L).map(i => Row(i + shift, if (i == 0) "a" else null))
+    }, StructType(Seq(StructField("idx", LongType), StructField("v", StringType))))
+    val out = Ffill.ffillScanOrdered(df, "idx", Seq("v"))
+    assert(out.isDefined)
+    val e = intercept[SparkException](out.get.collect())
+    assert(e.getMessage.contains("order changed"), e.getMessage)
   }
 
   test("leading nulls stay null; carries cross many empty blocks") {
@@ -55,4 +139,10 @@ class FfillSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(
       (Some("a"), None), (Some("a"), Some("p")), (Some("a"), Some("p"))))
   }
+}
+
+object FfillSpec {
+  /** Evaluation counter of the order-change test's source (tasks run in
+    * the test JVM under `local[n]`). */
+  val calls = new AtomicInteger
 }
