@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
+
+import graft.engine.GraftSession
 
 /** Per-round benchmark: times every SparkEntry query at the env-selected
   * scale factor and prints ONE JSON line. Full evaluation is forced with
@@ -84,18 +85,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadBefore = loadAvg()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-bench")
     // Every in-repo unpartitioned window runs over a bounded input (block
     // summaries, top-k survivors, ≤10-row header grids) — the WindowExec
     // warning is a false positive there, and dozens of repeats threaten
@@ -143,29 +134,9 @@ object Bench {
     // and turn late queries into spill-bound outliers (round 5 measured
     // p29 at 56 s in-suite vs 2.3 s isolated; the ops were never slow,
     // the JVM was). Not timed: a real cluster job gets a fresh app.
-    // ORDER MATTERS: the shared query-family memos are dropped FIRST via
-    // their DataFrame handles (unpersisting their RDDs directly clears
-    // the storage level permanently while the CacheManager keeps routing
-    // through the dead InMemoryRelation — every post-reap reference then
-    // recomputes with NO re-cache; round 11's p134 driver iterations
-    // [44.5, 44.3, 7.1] were exactly this: each "warm" iteration re-ran
-    // the co-purchase self-join once per reference). The raw-RDD sweep
-    // after catches only what no memo owns.
-    // clearCache AFTER the memo drop: the raw-RDD sweep clears STORAGE
-    // but leaks the CacheManager ENTRY — ops-internal persists
-    // (triangleCount's oriented edges, pageRank's loop invariants, every
-    // kCorePeel round) are swept that way, and across 405 queries × 3
-    // iterations the dead entries pile up: every later persist/lookup
-    // pays a sameResult() walk over thousands of stale plans AND fresh
-    // plans get routed through dead InMemoryRelations (recompute, no
-    // re-cache). Measured this round: late-suite queries ran 1.3–1.8×
-    // their fresh-JVM cost (p154 3.56 vs 2.10, p152 2.97 vs 1.39, p156
-    // 2.55 vs 1.25, p134 11.09 vs 6.55); clearCache() drops the entries
-    // with the storage so each query starts against an empty cache map.
+    // GraftSession.reset documents what each step of the reap fixes.
     def reapBlocks(): Unit = {
-      graft.queries.PipelineQueries.reapMemos(spark)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.reset(spark)
       System.gc()
     }
     // Per-query EXTERNAL load rides next to each timing: round 10's
@@ -270,9 +241,9 @@ object Bench {
       if (scale <= 1) Seq.empty else {
         reapBlocks()
         val evScale = math.max(scale / 2, 1)
-        val docsPath = graft.tools.ScaleData.materialize(spark, sfDir, "documents", scale, cpus.toInt)
-        val eventsPath = graft.tools.ScaleData.materialize(spark, sfDir, "events", evScale, cpus.toInt)
-        val embPath = graft.tools.ScaleData.materialize(spark, sfDir, "embeddings", scale, cpus.toInt)
+        val docsPath = graft.tools.ScaleData.materialize(spark, sfDir, "documents", scale, cpus)
+        val eventsPath = graft.tools.ScaleData.materialize(spark, sfDir, "events", evScale, cpus)
+        val embPath = graft.tools.ScaleData.materialize(spark, sfDir, "embeddings", scale, cpus)
         val ops = graft.tools.ScaledOps.run(spark, docsPath, eventsPath, embPath)
         failed += ops.count(_.median < 0)
         scaledMeta = s""""docs_x":$scale,"events_x":$evScale,"""

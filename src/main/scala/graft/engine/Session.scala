@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session factory + table loading for the graft engine.
+/** The one place a graft session is built, tuned and reset.
   *
   * Settings are scale-minded for any `local[n]` session: shuffle
   * partitions sized to cores (not the 200 default), AQE on so skewed
@@ -26,43 +26,103 @@ object GraftSession {
     * this builds the JVM's first session. */
   val CodegenCacheEntries: Int = 2000
 
+  /** Build (or join) the JVM's `local[cores]` session. Only the
+    * cluster-shaped and static confs are set here; the runtime confs
+    * and the optimizer rule and SQL functions come from [[tune]]. */
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cores]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // parquet TIMESTAMP(isAdjustedToUTC=false) loads as TIMESTAMP_LTZ
-      // (wall clock = session UTC ⇒ same epoch micros DuckDB sees), not
-      // TIMESTAMP_NTZ — unix_micros & friends require LTZ, and every
-      // oracle compares epoch values under UTC
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftOptimizations.install(spark)
-    spark
+    tune(spark)
   }
 
-  /** Apply engine-required runtime confs to an externally-created session
-    * (a caller may hand us its own). Only session-mutable confs here:
-    * the codegen cache size ([[CodegenCacheEntries]]) is static, so a
-    * session created elsewhere has to set it when it is created. */
+  /** The one injection point for engine state: runtime confs, the
+    * [[graft.functions.SimilarityLengthPruning]] optimizer rule and the
+    * SQL-callable native functions. Idempotent, so it is safe on a
+    * session a caller hands us, and any number of times. Only
+    * session-mutable confs here: the codegen cache size
+    * ([[CodegenCacheEntries]]) is static, so a session created elsewhere
+    * has to set it when it is created. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // parquet TIMESTAMP(isAdjustedToUTC=false) loads as TIMESTAMP_LTZ
+    // (wall clock = session UTC ⇒ same epoch micros DuckDB sees), not
+    // TIMESTAMP_NTZ — unix_micros & friends require LTZ, and every
+    // oracle compares epoch values under UTC
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    graft.functions.GraftOptimizations.install(spark)
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(graft.functions.SimilarityLengthPruning))
+      spark.experimental.extraOptimizations =
+        rules :+ graft.functions.SimilarityLengthPruning
+    graft.functions.GraftFunctions.register(spark)
     spark
+  }
+
+  private val memos =
+    scala.collection.mutable.HashMap.empty[(SparkSession, String), DataFrame]
+
+  /** A shared intermediate, built once per (session, key) and persisted
+    * `MEMORY_AND_DISK`, so a gate family (say the five consumers of the
+    * near-duplicate pair list) computes it once in a sequential run.
+    * The key must name the recipe and its inputs (e.g. the sf dir).
+    *
+    * LIFECYCLE: this is a harness-run cache, not library API. Entries
+    * live until [[reset]], so they assume (a) one session per run, and
+    * (b) inputs that do not change during the run (a rewritten sf dir
+    * would serve stale persisted blocks). After [[reset]] the next
+    * consumer rebuilds and re-persists: its first use is cold (it pays
+    * its own build), later uses are warm, and correctness never depends
+    * on the cache. A long-lived multi-tenant session would want weak
+    * keys and unpersist-after-last-consumer, out of scope for a batch
+    * harness. */
+  def memo(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memos.synchronized {
+      memos.getOrElseUpdate((s, key),
+        build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    }
+
+  /** Release everything this session has persisted, so the next query
+    * starts against an empty cache. Each step fixes a measured bug, and
+    * leaving any one out fails `SessionSpec`; once all three run, their
+    * order does not change the end state:
+    *  1. Memos are dropped through their DataFrame handles. A raw-RDD
+    *     sweep alone clears a memo's storage level for good while the
+    *     memo and its CacheManager entry live on, so every later
+    *     reference recomputes the whole lineage through the dead
+    *     `InMemoryRelation` with no re-cache (p134's iterations of 44.5,
+    *     44.3 and 7.1 s, each warm one three cold co-purchase
+    *     self-joins). Dropping the memo lets the next consumer rebuild
+    *     and re-persist.
+    *  1. `clearCache` next: ops-internal persists (triangleCount's
+    *     oriented edges, pageRank's loop invariants, every kCorePeel
+    *     round) would otherwise leave their CacheManager entries behind.
+    *     Across a 405-query run the dead entries pile up: every persist
+    *     or lookup walks `sameResult` over thousands of stale plans, and
+    *     fresh plans route through dead relations (late-suite queries
+    *     ran 1.3–1.8× their fresh-JVM cost).
+    *  1. A blocking raw-RDD sweep last catches what no plan owns
+    *     (`localCheckpoint` and `RDD.persist` blocks, e.g. connected
+    *     components' per-round labels), which otherwise stay until the
+    *     ContextCleaner notices and evict later queries' working memory. */
+  def reset(s: SparkSession): Unit = {
+    memos.synchronized {
+      memos.keys.filter(_._1 eq s).toList.foreach { k =>
+        memos.remove(k).foreach(_.unpersist(false))
+      }
+    }
+    s.sharedState.cacheManager.clearCache()
+    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }
 

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, Decimal, DecimalType, DoubleType, StringType, StructField, StructType}
@@ -385,34 +384,11 @@ object GraftFunctions {
     "misra_gries" -> (exprs => MisraGriesAgg(exprs(0),
       exprs(1).eval().asInstanceOf[Int]).toAggregateExpression()))
 
-  /** Register both functions on an existing session (SQL-callable). */
+  /** Make the functions above SQL-callable on a session;
+    * [[graft.engine.GraftSession.tune]] calls this. */
   def register(spark: SparkSession): Unit =
     registrations.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "built-in")
     }
-}
-
-/** Session-extension hook: `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`) injects the
-  * engine's native functions into every session — the idiomatic
-  * packaging for a Spark-native library's custom expressions. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("unaccent"),
-      new ExpressionInfo(classOf[UnaccentExpression].getName, "unaccent"),
-      (exprs: Seq[Expression]) => UnaccentExpression(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("similarity_ratio"),
-      new ExpressionInfo(classOf[SimilarityExpression].getName, "similarity_ratio"),
-      (exprs: Seq[Expression]) => SimilarityExpression(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("misra_gries"),
-      new ExpressionInfo(classOf[MisraGriesAgg].getName, "misra_gries"),
-      (exprs: Seq[Expression]) => MisraGriesAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Int])))
-    ext.injectOptimizerRule(_ => SimilarityLengthPruning)
-  }
 }

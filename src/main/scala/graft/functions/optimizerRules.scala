@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Add, And, Cast, Expression, GreaterThanOrEqual, Least, Length, Literal, Multiply}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -66,15 +65,5 @@ object SimilarityLengthPruning extends Rule[LogicalPlan] {
           nj
         case None => j
       }
-  }
-}
-
-/** Install the engine's optimizer rules on an existing session (the
-  * extensions path below covers fresh sessions). */
-object GraftOptimizations {
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.contains(SimilarityLengthPruning))
-      spark.experimental.extraOptimizations = existing :+ SimilarityLengthPruning
   }
 }

@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.engine.GraftSession
 import scala.util.control.NonFatal
 
 /** The round ritual for bench adjudication (SCALING.md "Pinned idle
@@ -41,27 +40,16 @@ object FloorCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val iters = if (args.length > 1) args(1).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-floor-check")
     val loadBefore = load1()
     try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
     catch { case NonFatal(e) => System.err.println(s"warmup: ${e.getMessage}") }
     val rows = Pinned.map { case (name, pinned) =>
-      // NO clearCache between iterations — the pinned floors were
-      // measured with TimeOne's protocol (caches persist across
-      // iterations; p134's first two iterations carry the one-time
-      // copurchase snapshot), and a diff is only meaningful under the
-      // same protocol
+      // NO reset between iterations — the pinned floors were measured
+      // with this protocol (caches persist across iterations; p134's
+      // first two iterations carry the one-time copurchase snapshot),
+      // and a diff is only meaningful under the same protocol
       val ts = (1 to iters).map { _ =>
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
 import graft.SparkEntry
+import graft.engine.GraftSession
 
 /** Round-transition hash probe: prints a deterministic content hash for
   * each named gate so a rewrite can be checked bit-identical against
@@ -16,18 +17,14 @@ object HashProbe {
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "p52_length_deciles", "p81_corpus_datasheet", "p115_conversion_latency",
       "p24_length_quantiles", "p53_quantiles_approx", "p50_approx_quantiles")
-    val spark = SparkSession.builder()
-      .appName("graft-hash-probe").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = GraftSession.local(32, "graft-hash-probe")
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_PROBE_ITERS > 1 turns the probe into a quick idle
     // timer (per-iteration cache hygiene like the bench loop)
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROBE_ITERS", "1").toInt
     for (n <- names) {
       val secs = (1 to iters).map { _ =>
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+        GraftSession.reset(spark)
         val df = SparkEntry.queries(n)(spark, sfDir)
         val cols = df.columns.sorted.toSeq
         val t0 = System.nanoTime()

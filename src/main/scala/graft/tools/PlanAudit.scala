@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.engine.GraftSession
 
 /** Prints formatted physical plans for the named queries (or a default
   * headline set) so plan regressions — lost pushdown, surprise sort-merge
@@ -14,15 +13,7 @@ object PlanAudit {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_scan_filter", "q06_ffill", "q08_fuzzy_top1", "q12_groupby",
         "q14_topk", "p03_dedup_minhash", "p07_ann_brute", "p08_ann_lsh")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(8, "graft-plan-audit")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===================== $n =====================")

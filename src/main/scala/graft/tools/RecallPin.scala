@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Regenerates the pinned ANN recall numerators in PipelineQueries
   * (`lshHits` / `ivfHits`). Those constants are data: valid only for the
@@ -14,15 +14,8 @@ import org.apache.spark.sql.SparkSession
 object RecallPin {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "graft-recall-pin")
     try {
       for ((gate, name) <- Seq("p08_ann_lsh" -> "lshHits", "p20_ann_ivf" -> "ivfHits",
           "p78_ann_pq" -> "pqHits", "p79_ann_ivfpq" -> "ivfPqHits")) {

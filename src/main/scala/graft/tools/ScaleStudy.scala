@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{GraftSession, Tables}
 import graft.ops.{AsofJoin, CorpusOps, Dedup, Ffill, TextAnalysis}
 import graft.streaming.EventsStream
 import scala.util.control.NonFatal
@@ -514,28 +514,18 @@ object ScaleStudy {
     // optional section filter: docs | events | headliners | graph
     val section = args.drop(1).headOption.getOrElse("all")
     def on(s: String) = section == "all" || section == s
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-scale-study")
 
     // materialize scaled inputs to parquet so every measured op reads
     // from storage like a real job (not from an in-memory union plan);
     // lazy per-section so a filtered run only materializes what it uses
     lazy val docPaths = Seq(1, 4, 20, 50).map(k =>
-      k -> ScaleData.materialize(spark, sfDir, "documents", k, cpus.toInt)).toMap
+      k -> ScaleData.materialize(spark, sfDir, "documents", k, cpus)).toMap
     lazy val embPaths = Seq(1, 4, 20, 50).map(k =>
-      k -> ScaleData.materialize(spark, sfDir, "embeddings", k, cpus.toInt)).toMap
+      k -> ScaleData.materialize(spark, sfDir, "embeddings", k, cpus)).toMap
     lazy val eventPaths = Seq(1, 10, 50).map(k =>
-      k -> ScaleData.materialize(spark, sfDir, "events", k, cpus.toInt)).toMap
+      k -> ScaleData.materialize(spark, sfDir, "events", k, cpus)).toMap
 
     def report(op: String, k: Int, rows: Long, sec: Double): Unit =
       println(f"[scale] $op%-22s x$k%-3d rows=$rows%-9d ${sec}%8.2f s")
@@ -660,7 +650,7 @@ object ScaleStudy {
     // Node counts scale ×1/×4/×20 at constant avg degree, so edge
     // volume scales linearly while the hub degree scales with it.
     if (on("graph")) for (k <- Seq(1, 4, 20, 50)) {
-      val path = ScaleData.materializeGraph(spark, 50000L, 8, k, cpus.toInt)
+      val path = ScaleData.materializeGraph(spark, 50000L, 8, k, cpus)
       val edges = spark.read.parquet(path)
       val nE = edges.count()
       val hub = edges.select(explode(array(col("src"), col("dst"))).as("v"))

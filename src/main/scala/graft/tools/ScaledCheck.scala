@@ -1,8 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
+
+import graft.engine.GraftSession
 
 /** SCALED correctness pins — the gate the sf0.01 DuckDB oracle cannot
   * be: scale-DEPENDENT wrongness (an overflow past a `require`
@@ -58,22 +60,12 @@ object ScaledCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val pinPath = args.drop(1).headOption.getOrElse("SCALED_PINS.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-scaled-check")
 
-    val docsPath = ScaleData.materialize(spark, sfDir, "documents", 20, cpus.toInt)
-    val eventsPath = ScaleData.materialize(spark, sfDir, "events", 10, cpus.toInt)
-    val embPath = ScaleData.materialize(spark, sfDir, "embeddings", 20, cpus.toInt)
+    val docsPath = ScaleData.materialize(spark, sfDir, "documents", 20, cpus)
+    val eventsPath = ScaleData.materialize(spark, sfDir, "events", 10, cpus)
+    val embPath = ScaleData.materialize(spark, sfDir, "embeddings", 20, cpus)
     val docs = spark.read.parquet(docsPath)
     val ev = spark.read.parquet(eventsPath)
       .withColumn("ts", to_timestamp(col("ts")))
@@ -135,7 +127,7 @@ object ScaledCheck {
       // collapses that graph to ~1 edge — a vacuous pin.)
       "pagerank_planted" -> (() => fingerprint(graft.ops.Graph.pageRank(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt)),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus)),
         iters = 3))),
       // round-14: the rest of the planted-graph family — all-integer
       // (BFS min-depths, peel survivors, triangle counts), so the
@@ -143,15 +135,15 @@ object ScaledCheck {
       // replays all four in DuckDB (mode="oracle" beside these pins)
       "bfs_planted" -> (() => fingerprint(graft.ops.Graph.bfsDepths(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt)),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus)),
         spark.range(1L, 2L).toDF("node"), maxDepth = 3))),
       "kcore_planted" -> (() => fingerprint(graft.ops.Graph.kCorePeel(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt)),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus)),
         k = 8, rounds = 3))),
       "triangles_planted" -> (() => fingerprint(graft.ops.Graph.triangleCount(
         spark.read.parquet(
-          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus.toInt))))),
+          ScaleData.materializeGraph(spark, 50000L, 8, 4, cpus))))),
       // ---- x10 events ----------------------------------------------
       "kaplan_meier" -> (() => fingerprint(
         graft.ops.Stats.kaplanMeier(subj, "dur", "ev"))),

@@ -91,7 +91,7 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(hs == hs.sorted && hs.distinct == hs)
   }
 
-  test("SQL registration via GraftFunctions.register and extensions builder") {
+  test("SQL registration via GraftFunctions.register") {
     GraftFunctions.register(spark)
     val r = spark.sql(
       "SELECT unaccent('Homologación') AS u, ROUND(similarity_ratio('abc', 'abd'), 4) AS s")

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftFunctions, GraftOptimizations}
+import graft.engine.GraftSession
+import graft.functions.GraftFunctions
 
 /** SimilarityLengthPruning: the length guard appears in the optimized
   * plan, results are unchanged (sound prune), and the rule is idempotent. */
@@ -17,7 +18,7 @@ class OptimizerRuleSpec extends AnyFunSuite {
     .select(col("c_name").as("a"), col("c_mktsegment").as("b"))
 
   test("guard is injected, results unchanged, rule idempotent") {
-    GraftOptimizations.install(spark)
+    GraftSession.tune(spark)
     val q = pairs.where(GraftFunctions.similarity_native($"a", $"b") >= 0.8)
     val optimized = q.queryExecution.optimizedPlan.toString
     assert(optimized.contains("length("), optimized)
@@ -34,7 +35,7 @@ class OptimizerRuleSpec extends AnyFunSuite {
   }
 
   test("guard never prunes a true match (soundness on a real cross join)") {
-    GraftOptimizations.install(spark)
+    GraftSession.tune(spark)
     val sup = graft.engine.Tables(spark, "/root/testdata/sf0.001", "supplier")
       .select(col("s_name").as("a")).limit(40)
     val cust = graft.engine.Tables(spark, "/root/testdata/sf0.001", "customer")
@@ -50,7 +51,7 @@ class OptimizerRuleSpec extends AnyFunSuite {
   }
 
   test("supplementary-plane pair at t=0.8: guard and scorer count the same unit") {
-    GraftOptimizations.install(spark)
+    GraftSession.tune(spark)
     // parquet-backed so the rule (not constant folding) does the pruning
     val dir = java.nio.file.Files.createTempDirectory("graft-astral").toString
     Seq(("😀😀😀😀a", "😀😀😀😀b"), ("😀", "😀a"), ("abcd", "abce"))

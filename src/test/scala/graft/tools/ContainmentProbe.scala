@@ -4,7 +4,7 @@ import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Root-cause probe for the ×20 `containment` runtime spread (round-13
   * verdict: 11.6 / 57.7 / 18.9 / 171.6 s across four runs with
@@ -20,20 +20,10 @@ object ContainmentProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-containment-probe")
     val scale = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE", "20").toInt
-    val docsPath = ScaleData.materialize(spark, sfDir, "documents", scale, cpus.toInt)
+    val docsPath = ScaleData.materialize(spark, sfDir, "documents", scale, cpus)
     val docs = spark.read.parquet(docsPath)
 
     def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
@@ -55,7 +45,7 @@ object ContainmentProbe {
     })
 
     (1 to iters).foreach { i =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.reset(spark)
       System.gc()
       val df = graft.ops.Dedup.containmentPairs(docs, shingleSize = 3,
         thresholdMicro = 900000L, dfCeiling = Some(100L),

@@ -4,7 +4,7 @@ import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import graft.engine.GraftSession
 
 /** Root-cause probe for the p134_triangles idle-floor drift (round-15
   * verdict: warm floor ~4.0 s in round 14 → ~5.2 s in round 15 with
@@ -26,18 +26,8 @@ object TrianglesProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val iters = args.drop(1).headOption.map(_.toInt).getOrElse(6)
     val preloadN = args.drop(2).headOption.map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus, "graft-triangles-probe")
 
     def gcMillis(): Long = ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
@@ -80,7 +70,7 @@ object TrianglesProbe {
     }
 
     (1 to iters).foreach { i =>
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.reset(spark)
       stages.clear()
       System.gc()
       val df = graft.SparkEntry.queries("p134_triangles")(spark, sfDir)
