@@ -2,13 +2,13 @@ package graft
 
 import scala.util.control.NonFatal
 
-import graft.engine.GraftSession
+import graft.engine.{GraftSession, Measure}
 
 /** Per-round benchmark: times every SparkEntry query at the env-selected
-  * scale factor and prints ONE JSON line. Full evaluation is forced with
-  * the `noop` datasource (every column materialized — a `.count()` would
-  * let Catalyst prune the projection and time a near-empty scan). Failed
-  * queries are reported as value -1, never as a fake timing.
+  * scale factor and prints ONE JSON line. Each query is timed by
+  * [[graft.engine.Measure.measure]] (reset, warm-up, timed noop-sink
+  * runs); failed queries are reported as value -1, never as a fake
+  * timing.
   *
   * Reports the per-query MEDIAN of ≥3 iterations (SPARK_GRAFT_BENCH_ITERS
   * to override): a single shared local[32] JVM shows 10–20× per-query
@@ -36,12 +36,6 @@ import graft.engine.GraftSession
   * SPARK_GRAFT_BENCH_ONLY=<substring>[,<substring>...] restricts the run
   * to matching query names — the local iteration loop for one operator. */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
   // Locale.ROOT: the f-interpolator uses the default locale, and a
   // comma-decimal locale (de_DE) would render the one machine-parsed
   // JSON line invalid.
@@ -54,37 +48,15 @@ object Bench {
   private def s2(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
-  // 1-minute loadavg (first /proc/loadavg field); -1 when unreadable
-  // (non-Linux dev box) — never throws after the queries already ran
-  private def loadAvg(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.mkString.split("\\s+")(0).toDouble finally src.close()
-    } catch { case NonFatal(_) => -1.0 }
+  private def jsonMap(kv: Seq[(String, String)]): String =
+    kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
 
-  // (total busy CPU jiffies across the box, this JVM's own jiffies) —
-  // the difference over a wall-clock window is EXTERNAL load, the
-  // signal loadavg can't give (loadavg counts the bench's own 32
-  // threads, so on a healthy idle box it reads 4-6 and any absolute or
-  // relative loadavg threshold mis-tags; measured round 11). USER_HZ
-  // is 100 on every Linux ABI. (-1, -1) when /proc is unreadable.
-  private def cpuJiffies(): (Long, Long) =
-    try {
-      val stat = scala.io.Source.fromFile("/proc/stat")
-      val line = try stat.getLines().next() finally stat.close()
-      val parts = line.trim.split("\\s+").drop(1).map(_.toLong)
-      // busy = everything except idle (idx 3) and iowait (idx 4)
-      val busy = parts.zipWithIndex.collect { case (v, i) if i != 3 && i != 4 => v }.sum
-      val selfSrc = scala.io.Source.fromFile("/proc/self/stat")
-      val s = try selfSrc.mkString finally selfSrc.close()
-      // comm may contain spaces — fields resume after the last ')'
-      val rest = s.substring(s.lastIndexOf(')') + 2).split(" ")
-      (busy, rest(11).toLong + rest(12).toLong) // utime + stime
-    } catch { case NonFatal(_) => (-1L, -1L) }
+  private def jsonList(xs: Seq[String]): String =
+    xs.map("\"" + _ + "\"").mkString("[", ",", "]")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadBefore = loadAvg()
+    val loadBefore = Measure.loadAvg()
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.local(cpus, "graft-bench")
     // Every in-repo unpartitioned window runs over a bounded input (block
@@ -104,7 +76,7 @@ object Bench {
 
     // session warmup: run the flagship once so JVM/codegen/scheduler
     // warmup is not charged to whichever query happens to run first
-    try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
+    try Measure.sink(SparkEntry.entry(spark))
     catch { case NonFatal(e) => System.err.println(s"[bench] warmup failed: ${e.getMessage}") }
     // one-time co-purchase snapshot build is SETUP (the scaled tier's
     // materialize precedent): post-reap graph queries read it back in
@@ -119,7 +91,6 @@ object Bench {
 
     val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSeq.filter(_.nonEmpty))
-    var failed = 0
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.exists(name.contains)) }
     if (selected.isEmpty) {
@@ -127,101 +98,31 @@ object Bench {
       spark.stop()
       sys.exit(1)
     }
-    // Between queries: reap leaked storage. localCheckpoint RDDs (e.g.
-    // connected components' per-round labels) stay persisted until the
-    // ContextCleaner notices their DataFrame was GC'd — across 73 queries
-    // × 3 iterations in one 8-16g JVM the leftovers evict working memory
-    // and turn late queries into spill-bound outliers (round 5 measured
-    // p29 at 56 s in-suite vs 2.3 s isolated; the ops were never slow,
-    // the JVM was). Not timed: a real cluster job gets a fresh app.
-    // GraftSession.reset documents what each step of the reap fixes.
-    def reapBlocks(): Unit = {
-      GraftSession.reset(spark)
-      System.gc()
-    }
-    // Per-query EXTERNAL load rides next to each timing: round 10's
-    // driver ran at ambient load ~4 and five graph medians read as
-    // regressions that idle re-runs disproved — a judge without re-run
-    // budget would have failed the round on an artifact that couldn't
-    // say "measured on a busy box". loadavg can't carry this signal
-    // (it counts the bench's own 32 threads: a healthy idle run sits
-    // at 4-6, and both absolute and self-relative loadavg cutoffs
-    // mis-tagged 20-85% of an ambient-idle run when measured), so each
-    // query's window is metered as (total busy jiffies − this JVM's
-    // jiffies) / wall = average CPU cores burned by OTHER processes
-    // while the query was measured. Queries above 1.0 external core
-    // are tagged `hiload` (suspect medians) in both artifacts; the
-    // per-iteration (sec, loadavg) pairs stay in the detail as raw
-    // context.
     // Per-query WARM-UP (round-17 verdict item 1a, declared in
-    // OPTIMIZATION_r18.md): one untimed run after the reap so the timed
-    // median measures the operator at steady state, not the C2/codegen
-    // warm-up slope — p134's iterations decayed 14 → 9 → 9.5 → 4.9 →
-    // 4.7 → 4.6 s and the old 3-iteration median landed on the slope,
-    // making the suite's biggest number a JIT artifact. The warm-up also
-    // absorbs each query's one-time internal cache build (iterations
-    // were already warm for caches from iteration 2 on — same boundary,
-    // now uniform from iteration 1). SPARK_GRAFT_BENCH_WARMUP=0 restores
-    // the old protocol; the JSON line carries `warmup` so every artifact
-    // self-identifies which protocol produced it. Additions-only: the
-    // timed region, sink, iteration count and median are unchanged.
+    // OPTIMIZATION_r18.md): p134's iterations decayed 14 → 9 → 9.5 →
+    // 4.9 → 4.7 → 4.6 s and the old warm-up-free median landed on the
+    // JIT slope. SPARK_GRAFT_BENCH_WARMUP=0 restores that protocol; the
+    // JSON line carries `warmup` so every artifact says which produced it.
     val warmups =
       try sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1").toInt
       catch { case NonFatal(_) => 1 }
     val perQuery = selected.map { case (name, fn) =>
-      reapBlocks()
-      (1 to warmups).foreach { _ =>
-        try fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        catch { case NonFatal(_) => () } // timed loop reports the failure
-      }
-      val (tb0, sj0) = cpuJiffies()
-      val tq0 = System.nanoTime()
-      val iterRecs = (1 to iterations).flatMap { _ =>
-        val l = loadAvg()
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          Some(((System.nanoTime() - t0) / 1e9, l))
-        } catch {
-          case NonFatal(e) =>
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            None
-        }
-      }
-      val (tb1, sj1) = cpuJiffies()
-      val wall = (System.nanoTime() - tq0) / 1e9
-      val extCores =
-        if (tb0 < 0 || tb1 < 0 || wall <= 0) -1.0
-        else math.max(0.0, ((tb1 - tb0) - (sj1 - sj0)) / 100.0 / wall)
-      if (iterRecs.isEmpty) failed += 1
-      (name,
-        if (iterRecs.isEmpty) -1.0 else median(iterRecs.map(_._1)),
-        iterRecs, extCores)
+      Measure.measure(spark, name, iterations, warmups)(fn(spark, sfDir))
     }
-    val results = perQuery.map { case (name, med, _, _) => name -> med }
-    val hiload = perQuery.collect {
-      case (name, med, _, ext) if med >= 0 && ext > 1.0 => name
-    }
+    var failed = perQuery.count(_.runs.isEmpty)
+    val ok = perQuery.filter(_.median >= 0)
+    // Queries measured while other processes kept more than one core
+    // busy are tagged `hiload` (round 10's bench box ran at ambient load ~4
+    // and five graph medians read as regressions that idle re-runs
+    // disproved); `varied` catches the in-JVM interference ext_cores
+    // cannot see. The detail carries each query's MIN beside its median
+    // so a reader can adjudicate either tag without re-running.
+    val hiload = ok.filter(_.extCores > 1.0).map(_.name)
     if (hiload.nonEmpty)
       System.err.println(s"[bench] WARNING: ${hiload.length} queries measured " +
         "with > 1 external CPU core busy — medians suspect: " +
         hiload.take(8).mkString(","))
-    // Iteration-variance tag: ext_cores only sees EXTERNAL load; in-JVM
-    // interference (cache thrash, GC, a cold memo rebuild) is invisible
-    // to it (round 11's three worst medians carried ext_cores 0.0 and
-    // were all cache-rebuild artifacts). max/min iteration spread > 3
-    // catches both classes — the detail carries each query's MIN next
-    // to the median so a reader can adjudicate a suspect median without
-    // re-running: the min is the code's demonstrated cost, the spread
-    // is the environment's.
-    val qmins = perQuery.collect { case (name, med, recs, _) if med >= 0 =>
-      name -> recs.map(_._1).min
-    }.toMap
-    val varied = perQuery.collect {
-      case (name, med, recs, _)
-          if med >= 0 && recs.length >= 2 && recs.map(_._1).min > 0 &&
-            recs.map(_._1).max / recs.map(_._1).min > 3.0 => name
-    }
+    val varied = ok.filter(_.varied).map(_.name)
     if (varied.nonEmpty)
       System.err.println(s"[bench] WARNING: ${varied.length} queries with " +
         "> 3x iteration spread (in-JVM or external interference) — " +
@@ -231,61 +132,41 @@ object Bench {
     // the sf0.1 suite is plan-overhead-dominated (median query ~0.4 s),
     // so THIS is the signal that catches a real plan regression.
     // SPARK_GRAFT_BENCH_SCALE=0 disables.
-    // scaledOps non-empty ⇒ the tier ran; summary + full map are derived
-    // from the same Seq so line and detail can never disagree
-    var scaledMeta = ""
-    val scaledOps: Seq[graft.tools.ScaledOps.ScaledRec] = if (only.nonEmpty) Seq.empty else try {
-      // env parse inside the try: a malformed SPARK_GRAFT_BENCH_SCALE must
-      // not throw after every query already ran and lose the JSON line
-      val scale = sys.env.getOrElse("SPARK_GRAFT_BENCH_SCALE", "20").toInt
-      if (scale <= 1) Seq.empty else {
-        reapBlocks()
-        val evScale = math.max(scale / 2, 1)
-        val docsPath = graft.tools.ScaleData.materialize(spark, sfDir, "documents", scale, cpus)
-        val eventsPath = graft.tools.ScaleData.materialize(spark, sfDir, "events", evScale, cpus)
-        val embPath = graft.tools.ScaleData.materialize(spark, sfDir, "embeddings", scale, cpus)
-        val ops = graft.tools.ScaledOps.run(spark, docsPath, eventsPath, embPath)
-        failed += ops.count(_.median < 0)
-        scaledMeta = s""""docs_x":$scale,"events_x":$evScale,"""
-        ops
-      }
+    val tier = if (only.nonEmpty) None else try {
+      // inside the try: a malformed SPARK_GRAFT_BENCH_SCALE must not
+      // throw after every query already ran and lose the JSON line
+      graft.tools.ScaledOps.run(spark, sfDir, cpus)
     } catch {
       case NonFatal(e) =>
         System.err.println(s"[bench] scaled tier failed: ${e.getMessage}")
         failed += 1
-        Seq.empty
+        None
     }
+    failed += tier.fold(0)(t => t.ops.count(_.median < 0) + t.recallPct.count(_ < 0))
     // the line gets the tier's total + op count + self-adjudication
     // aggregates (sum-of-min and the varied count — the scaled twin of
     // the suite's total_min/varied; a round-over-round scaled comparison
-    // is unreadable without them); the detail file gets the full maps
-    val scaledLineJson = if (scaledOps.isEmpty) "" else {
-      val timed = scaledOps.filter(r => r.median >= 0 && !r.name.endsWith("_pct"))
-      val t = timed.map(_.median).sum
-      val tMin = timed.map(_.min).sum
-      val nVaried = timed.count(_.varied)
-      s""","scaled":{$scaledMeta"total":${s3(t)},"total_min":${s3(tMin)},"varied":$nVaried,"n_ops":${scaledOps.length}}"""
-    }
-    val scaledDetailJson = if (scaledOps.isEmpty) "" else {
-      // `ops`/`ops_min` are SECONDS-ONLY; score entries (`_pct` recall
-      // scorecards — percentages, not timings) live in `scores` so a
-      // reader summing the maps never mixes units
-      val (scoreRecs, timedRecs) = scaledOps.partition(_.name.endsWith("_pct"))
-      val opsJson = timedRecs.map(r => "\"" + r.name + "\":" + s3(r.median)).mkString("{", ",", "}")
-      val minJson = timedRecs.map(r => "\"" + r.name + "\":" + s3(r.min)).mkString("{", ",", "}")
-      val scoresJson = scoreRecs.map(r => "\"" + r.name + "\":" + s3(r.median)).mkString("{", ",", "}")
-      val variedJson = timedRecs.collect { case r if r.varied => "\"" + r.name + "\"" }
-        .mkString("[", ",", "]")
-      s""","scaled":{$scaledMeta"ops":$opsJson,"ops_min":$minJson,"scores":$scoresJson,"varied":$variedJson}"""
+    // is unreadable without them); the detail file gets the full maps.
+    // `ops`/`ops_min` are seconds only; the recall score (a percentage)
+    // lives in `scores` so a reader summing the maps never mixes units.
+    val (scaledLineJson, scaledDetailJson) = tier.fold(("", "")) { t =>
+      val meta = s""""docs_x":${t.docsX},"events_x":${t.eventsX},"""
+      val timed = t.ops.filter(_.median >= 0)
+      val nOps = t.ops.length + t.recallPct.size
+      val opsJson = jsonMap(t.ops.map(r => r.name -> s3(r.median)))
+      val minJson = jsonMap(t.ops.map(r => r.name -> s3(r.min)))
+      val scoresJson = jsonMap(t.recallPct.toSeq.map(graft.tools.ScaledOps.RecallKey -> s3(_)))
+      (s""","scaled":{$meta"total":${s3(timed.map(_.median).sum)},"total_min":${s3(timed.map(_.min).sum)},"varied":${timed.count(_.varied)},"n_ops":$nOps}""",
+        s""","scaled":{$meta"ops":$opsJson,"ops_min":$minJson,"scores":$scoresJson,"varied":${jsonList(t.ops.filter(_.varied).map(_.name))}}""")
     }
 
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val results = perQuery.map(t => t.name -> t.median)
+    val total = ok.map(_.median).sum
     // sum-of-min beside the median-sum headline: the demonstrated cost
     // on a box whose ambient load varies mid-run — lets round-over-round
     // comparisons adjudicate environment noise without re-running
-    val totalMin =
-      results.collect { case (k, v) if v >= 0 => qmins.getOrElse(k, v) }.sum
-    val loadAfter = loadAvg()
+    val totalMin = ok.map(_.min).sum
+    val loadAfter = Measure.loadAvg()
     val loadJson = s""","load_before":${s2(loadBefore)},"load_after":${s2(loadAfter)}"""
     // the line carries only the slowest queries (failures first, value
     // -1) — short prefix keys, 2 decimals; everything is in the detail
@@ -296,23 +177,15 @@ object Bench {
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":${s3(total)},"total_min":${s3(totalMin)},"unit":"sec","n_queries":${results.length},"queries":$shortQs,"failed":$failed,"hiload":${hiload.length},"varied":${varied.length},"iterations":$iterations,"warmup":$warmups,"setup_sec":${s2(setupSec)},"sf":"$sfDir","detail":"BENCH_DETAIL.json"$loadJson$scaledLineJson}"""
     // full-name, full-precision report for humans/the judge
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val fullQs = jsonMap(results.map { case (k, v) => k -> v.toString })
     // per-iteration (sec, loadavg-at-start) pairs + per-query external
     // busy cores: the self-adjudication record — lets a reader see
     // which medians were measured against a busy box
-    val iterQs = perQuery.map { case (k, _, recs, _) =>
-      "\"" + k + "\":" + recs.map { case (sec, l) =>
-        s"[${s3(sec)},${s2(l)}]" }.mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val extQs = perQuery.map { case (k, _, _, ext) =>
-      "\"" + k + "\":" + s2(ext)
-    }.mkString("{", ",", "}")
-    val minQs = qmins.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + s3(v)
-    }.mkString("{", ",", "}")
-    val hiloadJson = hiload.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val variedJson = varied.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val detail = s"""{"metric":"total","value":$total,"total_min":$totalMin,"unit":"sec","n_queries":${results.length},"queries":$fullQs,"query_min":$minQs,"query_iters":$iterQs,"query_ext_cores":$extQs,"hiload":$hiloadJson,"varied":$variedJson,"failed":$failed,"iterations":$iterations,"warmup":$warmups,"setup_sec":$setupSec,"sf":"$sfDir"$loadJson$scaledDetailJson}"""
+    val iterQs = jsonMap(perQuery.map(t =>
+      t.name -> t.runs.map { case (sec, l) => s"[${s3(sec)},${s2(l)}]" }.mkString("[", ",", "]")))
+    val extQs = jsonMap(perQuery.map(t => t.name -> s2(t.extCores)))
+    val minQs = jsonMap(ok.map(t => t.name -> s3(t.min)))
+    val detail = s"""{"metric":"total","value":$total,"total_min":$totalMin,"unit":"sec","n_queries":${results.length},"queries":$fullQs,"query_min":$minQs,"query_iters":$iterQs,"query_ext_cores":$extQs,"hiload":${jsonList(hiload)},"varied":${jsonList(varied)},"failed":$failed,"iterations":$iterations,"warmup":$warmups,"setup_sec":$setupSec,"sf":"$sfDir"$loadJson$scaledDetailJson}"""
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
       try w.println(detail) finally w.close()

@@ -128,10 +128,6 @@ object GraftSession {
 
 /** Parquet table loader for the synthetic star schema (TESTDATA.md). */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Epoch-nanos long → microsecond timestamp. MUST be integral: a double
     * divide carries only 52 mantissa bits, and epoch nanos (~1.7e18)
     * exceed 2^53, so `(ts / 1000.0).toLong` can land 1 µs off (e.g.
@@ -179,8 +175,4 @@ object Tables {
       else d
     }
   }
-
-  /** Register every table as a temp view named after the file. */
-  def registerViews(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

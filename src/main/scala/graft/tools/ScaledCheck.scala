@@ -255,8 +255,7 @@ object ScaledCheck {
       }))
 
     val results = checks.map { case (name, f) =>
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.reset(spark)
       val t0 = System.nanoTime()
       val out = try {
         val (n, h) = f()

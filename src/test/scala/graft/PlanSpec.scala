@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-quality regression pins: the physical shapes the engine promises
@@ -227,7 +229,7 @@ class PlanSpec extends AnyFunSuite {
       "p18_hom_pipeline_intended")
     SparkEntry.queries.keys.filterNot(allowNl).foreach { name =>
       val p = try SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
-        catch { case _: Throwable => "" }
+        catch { case NonFatal(_) => "" }
       assert(!p.contains("CartesianProduct"), s"$name plans a CartesianProduct")
     }
   }

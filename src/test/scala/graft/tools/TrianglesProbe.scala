@@ -3,6 +3,7 @@ package graft.tools
 import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import graft.engine.GraftSession
 
@@ -63,7 +64,7 @@ object TrianglesProbe {
       others.foreach { n =>
         try graft.SparkEntry.queries(n)(spark, sfDir)
           .write.mode("overwrite").format("noop").save()
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[probe] preload $n failed: ${e.getMessage}") }
       }
       println(s"[probe] preload done; janino=${janino()} jit_ms=${jitMillis()}")
