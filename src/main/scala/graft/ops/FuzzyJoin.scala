@@ -1,8 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.column
+import org.apache.spark.sql.types.{DataType, MapType, StructField, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -33,10 +36,6 @@ object FuzzyJoin {
   def withPosition(df: DataFrame, posCol: String = "_cat_pos"): DataFrame =
     df.coalesce(1).withColumn(posCol, monotonically_increasing_id())
 
-  /** Top-1 candidate per probe row. Output: probe columns + candidate
-    * columns + `score`. Rows below `threshold` are dropped when
-    * `minScore` is inclusive (`>=`, new-path) or exclusive (`>`, old-path
-    * importer_standarizer.py:172). */
   /** Default scorer: R/O ratio over reference-normalized names (F15),
     * using the native codegen expression (no ScalaUDF on the hot path). */
   def normalizedRatio(probe: Column, cand: Column): Column =
@@ -44,6 +43,12 @@ object FuzzyJoin {
       coalesce(TextFunctions.normalizeName(probe), lit("")),
       coalesce(TextFunctions.normalizeName(cand), lit("")))
 
+  /** Top-1 candidate per probe row. Output: probe columns + candidate
+    * columns + `score`. Rows below `threshold` are dropped when
+    * `inclusive` (`>=`, new-path) or at it too when not (`>`, old-path
+    * importer_standarizer.py:172). The distributed form;
+    * [[bestMatchCollected]] is the eager one for a driver-held name
+    * list. */
   def bestMatch(
       probes: DataFrame,
       probeCol: String,
@@ -75,6 +80,48 @@ object FuzzyJoin {
     probes
       .join(best, col(probeCol) <=> col("_probe_val")) // null-safe: null probes keep their match
       .drop("_probe_val")
+  }
+
+  /** [[bestMatch]] of a driver-held list of probe `values` of type
+    * `valueType`, evaluated eagerly: one action scores the distinct
+    * values against the broadcast catalog as bestMatch does, keeps the
+    * pairs that clear the threshold and collects them, and the driver
+    * picks the top-1 per value by (score desc, catalog position asc),
+    * the order of bestMatch's window. Returns value → its best catalog
+    * row (the catalog's columns without `posCol`, then `score`) for each
+    * value that has one.
+    *
+    * The collect holds at most U×C rows (U distinct values, C catalog
+    * rows); only pairs above the threshold survive, so in practice about
+    * U. The values are a local relation spread over the session's
+    * cores, and nothing is joined back, windowed or shuffled. */
+  def bestMatchCollected(
+      values: Seq[Any],
+      valueType: DataType,
+      catalog: DataFrame,
+      candCol: String,
+      threshold: Double,
+      inclusive: Boolean = true,
+      scorer: (Column, Column) => Column = normalizedRatio,
+      posCol: String = "_cat_pos"): Map[Any, Row] = {
+    val distinct = values.distinct
+    if (distinct.isEmpty) return Map.empty
+    val cat = if (catalog.columns.contains(posCol)) catalog else withPosition(catalog, posCol)
+    val probes = catalog.sparkSession.createDataFrame(distinct.map(Row(_)).asJava,
+      StructType(Seq(StructField("_probe_val", valueType))))
+    val keep = if (inclusive) col("score") >= threshold else col("score") > threshold
+    val pairs = probes.crossJoin(broadcast(cat))
+      .withColumn("score", scorer(col("_probe_val"), col(candCol)))
+      .where(keep)
+      .select(col("_probe_val"), col("score"), col(posCol).cast("long"),
+        struct((cat.columns.toSeq.filterNot(_ == posCol) :+ "score").map(col): _*))
+      .collect()
+    def better(a: Row, b: Row): Boolean =
+      a.getDouble(1) > b.getDouble(1) ||
+        (a.getDouble(1) == b.getDouble(1) && a.getLong(2) < b.getLong(2))
+    pairs.groupBy(_.get(0)).map { case (v, rs) =>
+      v -> rs.reduce((a, b) => if (better(a, b)) a else b).getStruct(3)
+    }
   }
 
   /** Banded variant: probes and candidates join on a blocking key
@@ -248,76 +295,90 @@ object FuzzyJoin {
   * :152-180 legacy path used by the pipeline). */
 object ImporterStandardizer {
 
-  sealed trait Variant
+  /** How a variant scores a (name, catalog name) pair and whether a
+    * score equal to the threshold is accepted. */
+  sealed trait Variant {
+    def inclusive: Boolean
+    def scorer: (Column, Column) => Column
+  }
   /** New path: normalized names, plain ratio, accept `>= threshold`. */
-  case object Normalized extends Variant
+  case object Normalized extends Variant {
+    val inclusive = true
+    val scorer: (Column, Column) => Column = FuzzyJoin.normalizedRatio
+  }
   /** Legacy path (the one pipeline_transformation imports): raw names,
     * junk chars `\t . space -`, accept `> threshold` strictly. Junk
     * handling approximates difflib's isjunk by stripping junk chars
     * before scoring. */
-  case object Legacy extends Variant
+  case object Legacy extends Variant {
+    val inclusive = false
+    val scorer: (Column, Column) => Column = (p, c) => GraftFunctions.similarity_native(
+      coalesce(stripJunk(p), lit("")), coalesce(stripJunk(c), lit("")))
+  }
 
-  /** `release()` frees any cache the producing pipeline holds on the
-    * lineage — call it after the terminal action on `standardized` so
-    * cached blocks don't accumulate across grids in a long session. */
-  case class Result(
-      standardized: DataFrame,
-      notFound: DataFrame,
-      release: () => Unit = () => ())
+  /** The standardized rows and the distinct names without a match. */
+  case class Result(standardized: DataFrame, notFound: DataFrame)
 
   /** catalog schema: COD_IMP, NOMBRE_EMP, RUT (+extra cols ignored).
     *
     * Eager by design, so that later actions on `standardized` never
-    * rebuild the fuzzy lineage: the distinct non-null names of `nameCol`
-    * are collected once, scored against the broadcast catalog as a local
-    * relation, and the resulting name → match mapping is collected once.
-    * `standardized` is `df` left-joined to that mapping as a broadcast
-    * local relation; `notFound` is a local DataFrame of the collected
-    * names without a match.
-    *
-    * Driver bound: both collects hold at most U rows, U = distinct
-    * non-null names. The mapping was broadcast before it was collected,
-    * so it already had to fit on the driver; the name list is the same
-    * size. The left join keeps `df`'s row count, since the mapping has
-    * one row per name. */
+    * rebuild the fuzzy lineage: one aggregate collects the distinct
+    * non-null names of `nameCol` (≤ U names, U = distinct non-null
+    * names), then [[standardizeNames]] matches them. */
   def standardize(
       df: DataFrame,
       catalog: DataFrame,
       threshold: Double = 0.6,
       variant: Variant = Legacy,
+      nameCol: String = "IMPORTADOR"): Result =
+    standardizeNames(df, df.agg(collect_set(col(nameCol))).first().getSeq[Any](0),
+      catalog, threshold, variant, nameCol)
+
+  /** [[standardize]] for `names`, the distinct non-null values of
+    * `nameCol` in `df` when the caller has them already (the
+    * homologation pipeline reads them off its summary aggregate; NULLs
+    * and repeats are dropped).
+    *
+    * One action: [[FuzzyJoin.bestMatchCollected]] scores the names
+    * against the catalog and collects the pairs that clear the
+    * threshold (≤ U×C rows, C = catalog rows). The chosen name → match
+    * mapping (≤ U entries) becomes one typed literal map, and
+    * `standardized` is `df` with a lookup projection into it: the
+    * matched catalog name replaces `nameCol`, and `RUT` and `IMP_COD`
+    * are appended. Its columns and types are those of `df` left-joined
+    * to the mapping on `nameCol` (`nameCol` first, `df`'s other columns,
+    * then `RUT`, `IMP_COD`), with `df`'s row count, but there is no
+    * join, broadcast or shuffle. Each row's lookup scans the map
+    * (O(U) per row), which suits a catalog-sized U. `notFound` is a
+    * local DataFrame of the names without a match. */
+  def standardizeNames(
+      df: DataFrame,
+      names: Seq[Any],
+      catalog: DataFrame,
+      threshold: Double = 0.6,
+      variant: Variant = Legacy,
       nameCol: String = "IMPORTADOR"): Result = {
     val spark = df.sparkSession
-    val distinctNames = df.select(nameCol).where(col(nameCol).isNotNull).distinct()
-    val nameRows = distinctNames.collect().toSeq
-    val names = spark.createDataFrame(nameRows.asJava, distinctNames.schema)
-    val cat = FuzzyJoin.withPosition(
-      catalog.select("COD_IMP", "NOMBRE_EMP", "RUT"))
-    val matched = variant match {
-      case Normalized =>
-        FuzzyJoin.bestMatch(names, nameCol, cat, "NOMBRE_EMP",
-          threshold, inclusive = true)
-      case Legacy =>
-        FuzzyJoin.bestMatch(names, nameCol, cat, "NOMBRE_EMP",
-          threshold, inclusive = false,
-          scorer = (p, c) => GraftFunctions.similarity_native(
-            coalesce(stripJunk(p), lit("")), coalesce(stripJunk(c), lit(""))))
-    }
-    val mappingPlan = matched.select(
-      col(nameCol),
-      col("NOMBRE_EMP").as("IMPORTADOR_STD"),
-      col("RUT"),
-      col("COD_IMP").as("IMP_COD"))
-    val mappingRows = mappingPlan.collect().toSeq
-    val mapping = spark.createDataFrame(mappingRows.asJava, mappingPlan.schema)
-    // J1: broadcast left enrichment + coalesce-back
-    val joined = df.join(broadcast(mapping), Seq(nameCol), "left")
-      .withColumn(nameCol, coalesce(col("IMPORTADOR_STD"), col(nameCol)))
-      .drop("IMPORTADOR_STD")
-    // not_found = distinct names with no accepted match
-    val matchedNames = mappingRows.map(_.get(0)).toSet
+    val name = df.schema(nameCol)
+    val distinct = names.filter(_ != null).distinct
+    val cat = catalog.select("COD_IMP", "NOMBRE_EMP", "RUT")
+    val best = FuzzyJoin.bestMatchCollected(distinct, name.dataType, cat, "NOMBRE_EMP",
+      threshold, variant.inclusive, variant.scorer)
+    // catalog column → its name in the lookup's struct
+    val fields = Seq("NOMBRE_EMP" -> "IMPORTADOR_STD", "RUT" -> "RUT", "COD_IMP" -> "IMP_COD")
+    val matchType = StructType(fields.map { case (c, as) => StructField(as, cat.schema(c).dataType) })
+    val mapping = best.map { case (n, m) => n -> Row.fromSeq(fields.map(f => m.getAs[Any](f._1))) }
+    // J1: a left enrichment as one lookup projection, coalesce-back
+    val hit = element_at(
+      column(Literal.create(mapping, MapType(name.dataType, matchType))), col(nameCol))
+    val standardized = df.select(
+      (coalesce(hit("IMPORTADOR_STD"), col(nameCol)).as(nameCol) +:
+        df.columns.toSeq.filterNot(_ == nameCol).map(col)) ++
+        Seq(hit("RUT").as("RUT"), hit("IMP_COD").as("IMP_COD")): _*)
     val notFound = spark.createDataFrame(
-      nameRows.filterNot(r => matchedNames(r.get(0))).asJava, distinctNames.schema)
-    Result(joined, notFound)
+      distinct.filterNot(best.contains).map(Row(_)).asJava,
+      StructType(Seq(name.copy(nullable = false))))
+    Result(standardized, notFound)
   }
 
   private def stripJunk(c: Column): Column =

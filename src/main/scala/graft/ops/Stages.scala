@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -282,24 +282,54 @@ object Stages {
     converted.select(existing ++ appended: _*)
   }
 
-  /** A1 + BEV zeroing (transform_pipeline.py:243-245): zero CO₂ for BEVs,
-    * then impute remaining NULLs in both derived measures with the
-    * rounded global mean. The mean is a tiny scalar agg (one extra job
-    * over two columns — parquet-pruned), then folded in as a literal so
-    * the main plan stays a single pass. */
+  /** The BEV-zeroing half of [[bevZeroAndImpute]]
+    * (transform_pipeline.py:243): CO₂ is 0 for BEVs. A projection, no
+    * action. */
+  def bevZero(
+      df: DataFrame,
+      co2Col: String = "EMIS_CO2_EQUIV",
+      categoryCol: String = "CATEGORIA_PROPULSION"): DataFrame =
+    df.withColumn(co2Col, when(col(categoryCol) === "bev", 0.0).otherwise(col(co2Col)))
+
+  /** The imputation means of [[bevZeroAndImpute]] as aggregate columns:
+    * each measure's global mean rounded to 2 places. Aggregate them over
+    * [[bevZero]]'s output, alone or beside other aggregates, and hand the
+    * row to [[impute]]. */
+  def imputeMeans(
+      co2Col: String = "EMIS_CO2_EQUIV",
+      rendCol: String = "REND_EQUIV_KML"): Seq[Column] =
+    Seq(co2Col, rendCol).map(c => round(avg(col(c)), 2).as(meanName(c)))
+
+  /** The impute half (transform_pipeline.py:244-245): NULLs of both
+    * measures become the means that `means`, a row holding
+    * [[imputeMeans]]' columns, carries as literals, so the plan stays a
+    * single pass. A NULL mean (no non-NULL value) leaves its column as
+    * it is. */
+  def impute(
+      df: DataFrame,
+      means: Row,
+      co2Col: String = "EMIS_CO2_EQUIV",
+      rendCol: String = "REND_EQUIV_KML"): DataFrame =
+    Seq(co2Col, rendCol).foldLeft(df) { (d, c) =>
+      val i = means.fieldIndex(meanName(c))
+      if (means.isNullAt(i)) d
+      else d.withColumn(c, coalesce(col(c), lit(means.getDouble(i))))
+    }
+
+  private def meanName(c: String): String = s"_mean_$c"
+
+  /** A1 + BEV zeroing (transform_pipeline.py:243-245): [[bevZero]], one
+    * scalar agg of the [[imputeMeans]] (one extra action over two
+    * columns), then [[impute]]. [[graft.pipeline.Homologation.pipeline]]
+    * runs the same three pieces with the means inside its one summary
+    * aggregate. */
   def bevZeroAndImpute(
       df: DataFrame,
       co2Col: String = "EMIS_CO2_EQUIV",
       rendCol: String = "REND_EQUIV_KML",
       categoryCol: String = "CATEGORIA_PROPULSION"): DataFrame = {
-    val zeroed = df.withColumn(co2Col,
-      when(col(categoryCol) === "bev", 0.0).otherwise(col(co2Col)))
-    val row = zeroed.agg(
-      round(avg(col(co2Col)), 2).as("m1"),
-      round(avg(col(rendCol)), 2).as("m2")).first()
-    val d2 = if (row.isNullAt(0)) zeroed
-      else zeroed.withColumn(co2Col, coalesce(col(co2Col), lit(row.getDouble(0))))
-    if (row.isNullAt(1)) d2
-    else d2.withColumn(rendCol, coalesce(col(rendCol), lit(row.getDouble(1))))
+    val zeroed = bevZero(df, co2Col, categoryCol)
+    val means = imputeMeans(co2Col, rendCol)
+    impute(zeroed, zeroed.agg(means.head, means.tail: _*).first(), co2Col, rendCol)
   }
 }

@@ -15,11 +15,12 @@ import graft.schema.{HeaderIdentify, HeaderRules}
   * the collected ≤10-row prefix (provably tiny); its outputs — the rename
   * map and `maxrow` — are baked into the plan as literals. The stages
   * after it run over one parse of the grid (persisted when `cache=true`):
-  * one narrow forward-fill pass, then pure Catalyst. Four more bounded
+  * one narrow forward-fill pass, then pure Catalyst. Three more bounded
   * driver collects build the plan: the forward fill's per-partition
-  * preview, the imputation means (one row), then the distinct importer
-  * names and their best catalog match (≤ one row per distinct name
-  * each); the importer join is a broadcast of that collected mapping.
+  * preview, one summary aggregate (one row, its importer set ≤ U names)
+  * and the scored importer pairs (≤ U×C rows); the importer match is
+  * applied as a lookup into a ≤ U-entry literal map, so the plan has no
+  * join and nothing is broadcast by hash.
   */
 object Homologation {
 
@@ -68,31 +69,48 @@ object Homologation {
       .select(selected :+ col(orderCol): _*)
   }
 
+  /** What [[pipeline]] returns: the standardized rows and the importer
+    * names without a match, plus the row count and the `AÑO` range
+    * (None when no row has an `AÑO`) that its summary aggregate read.
+    * `release()` frees the pipeline's caches; call it after the terminal
+    * action on `standardized`. */
+  final case class Result(
+      standardized: DataFrame,
+      notFound: DataFrame,
+      rows: Long,
+      years: Option[(Int, Int)],
+      release: () => Unit)
+
   /** pipeline_transformation (transform_pipeline.py:218-251). `catalog`
     * is the importer master table (bd-importadores).
     *
     * `cache=true` persists two tables, both `MEMORY_AND_DISK`: the raw
     * `grid`, so header identification and the stage chain parse the
-    * source once, and the staged table, so the imputation-mean agg, the
-    * importer-name collect and the caller's terminal actions share one
-    * computation of the header+transform chain. Both caches are owned by
-    * the returned `Result.release()` — call it after the terminal action
-    * (cached blocks otherwise accumulate across grids in a long-lived
-    * session). `cache=false` persists nothing (right for tiny demo grids
-    * and for one-shot runs where recompute beats disk-backed caching).
+    * source once, and the staged table, so the summary aggregate and the
+    * caller's terminal actions share one computation of the
+    * header+transform chain. Both caches are owned by the returned
+    * `Result.release()` — call it after the terminal action (cached
+    * blocks otherwise accumulate across grids in a long-lived session).
+    * `cache=false` persists nothing (right for tiny demo grids and for
+    * one-shot runs where recompute beats disk-backed caching).
     *
-    * Driver collects made while building the result: the header prefix
-    * (≤ `HeaderIdentify.MaxScan` rows), the forward fill's preview (≤ one
-    * row per partition; see [[graft.ops.Ffill.ffillScanOrdered]]), the
-    * imputation means (one row), and in
-    * [[ImporterStandardizer.standardize]] the distinct importer names and
-    * their mapping (≤ one row per distinct name each). */
+    * Driver collects made while building the result, each one action:
+    *  - the header prefix (≤ `HeaderIdentify.MaxScan` rows);
+    *  - the forward fill's preview (≤ one row per partition; see
+    *    [[graft.ops.Ffill.ffillScanOrdered]]);
+    *  - one summary aggregate over the BEV-zeroed staged table (one row):
+    *    the two imputation means, min and max `AÑO`, the row count and
+    *    the set of importer names (≤ U names, U = distinct non-null
+    *    names);
+    *  - in [[ImporterStandardizer.standardizeNames]], the names' scored
+    *    catalog pairs above the threshold (≤ U×C rows, C = catalog rows),
+    *    whose top-1 per name becomes a ≤ U-entry literal lookup map. */
   def pipeline(
       grid: DataFrame,
       rules: HeaderRules,
       catalog: DataFrame,
       mode: CompatMode = CompatMode.Reference,
-      cache: Boolean = true): ImporterStandardizer.Result = {
+      cache: Boolean = true): Result = {
     val raw = if (cache) grid.persist(StorageLevel.MEMORY_AND_DISK) else grid
     // both '-' columns filled in one pass; the stages in between touch
     // neither, so this equals transformDatetime ... transformPbv
@@ -108,9 +126,18 @@ object Homologation {
       .transform(Stages.co2Equiv(_))
       .transform(Stages.gasesEmissions(_))
     val staged = if (cache) chain.persist(StorageLevel.MEMORY_AND_DISK) else chain
-    val df = Stages.bevZeroAndImpute(staged)
-    val r = ImporterStandardizer.standardize(df, catalog)
-    if (cache) r.copy(release = () => { staged.unpersist(); raw.unpersist(); () }) else r
+    // Stages.bevZeroAndImpute and ImporterStandardizer.standardize, with
+    // their two aggregates and the caller's year/row stats in one
+    val zeroed = Stages.bevZero(staged)
+    val stats = Stages.imputeMeans() ++ Seq(min(col("AÑO")).as("y0"), max(col("AÑO")).as("y1"),
+      count(lit(1)).as("rows"), collect_set(col("IMPORTADOR")).as("names"))
+    val summary = zeroed.agg(stats.head, stats.tail: _*).first()
+    val r = ImporterStandardizer.standardizeNames(
+      Stages.impute(zeroed, summary), summary.getSeq[Any](summary.fieldIndex("names")), catalog)
+    val years = if (summary.isNullAt(summary.fieldIndex("y0"))) None
+      else Some((summary.getAs[Int]("y0"), summary.getAs[Int]("y1")))
+    val release = if (cache) () => { staged.unpersist(); raw.unpersist(); () } else () => ()
+    Result(r.standardized, r.notFound, summary.getAs[Long]("rows"), years, release)
   }
 
   /** EP3 publish projection: present published columns only, in order

@@ -3,7 +3,6 @@ package graft.pipeline
 import java.nio.file.Paths
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, count, lit, max, min}
 
 import graft.engine.GraftSession
 import graft.ops.CompatMode
@@ -15,6 +14,16 @@ import graft.sources.OrderedScan
   * `datos3cv_<minYear>-<maxYear>.csv` out, with the memoized header
   * mapping store round-tripped and a not-found importer report — the
   * fail-fast replacement for the reference's interactive fallback (F25).
+  *
+  * A warm run on a 2,000-row grid fires 11 Spark jobs: 3 for the
+  * grid's and the catalog's CSV schemas, the header prefix collect, the
+  * forward fill's preview, 3 for the pipeline's one summary aggregate
+  * (the staged table's first computation, the shuffle-map stage and the
+  * result), 2 for the scored importer collect (the catalog's broadcast
+  * and the collect), and the write. The row count, the `AÑO` range and
+  * the not-found names are the pipeline's driver-side results (one row,
+  * ≤ U names), so no action runs after the write. A grid whose data rows hold no `AÑO` fails with an
+  * `IllegalArgumentException` that names it.
   *
   * Usage: runMain graft.pipeline.RunHomologation
   *   <rawGridCsv> <catalogCsv> <outDir> [mappingJson] [reference|intended]
@@ -43,26 +52,22 @@ object RunHomologation {
     val grid = OrderedScan.csvGrid(spark, gridCsv)
     val catalog = OrderedScan.csvCatalog(spark, catalogCsv)
     val result = Homologation.pipeline(grid, rules, catalog, mode)
+    try {
+      val (y0, y1) = result.years.getOrElse(throw new IllegalArgumentException(
+        s"$gridCsv: no data row holds an AÑO, so the published file has no year range"))
+      val outPath = s"$outDir/datos3cv_${y0}-${y1}.csv"
+      OrderedScan.writeSingleCsv(Homologation.publishProjection(result.standardized), outPath)
 
-    val published = Homologation.publishProjection(result.standardized)
-    // year range and row count in one job (the importer left join keeps
-    // the staged row count, so this equals published's count)
-    val stats = result.standardized
-      .agg(min(col("AÑO")), max(col("AÑO")), count(lit(1))).first()
-    val (y0, y1, rows) = (stats.getInt(0), stats.getInt(1), stats.getLong(2))
-    val outPath = s"$outDir/datos3cv_${y0}-${y1}.csv"
-    OrderedScan.writeSingleCsv(published, outPath)
+      // batched store persistence (one write per run, not per header)
+      mappingJson.foreach(p => MappingStore.save(rules, Paths.get(p)))
 
-    // batched store persistence (one write per run, not per header)
-    mappingJson.foreach(p => MappingStore.save(rules, Paths.get(p)))
-
-    val notFound = result.notFound.collect().map(_.getString(0))
-    if (notFound.nonEmpty) {
-      System.err.println(s"[homologation] ${notFound.length} importer(s) not matched:")
-      notFound.foreach(n => System.err.println(s"  - $n"))
-    }
-    println(s"""{"published":"$outPath","rows":$rows,"years":[$y0,$y1],"importers_not_found":${notFound.length}}""")
-    result.release() // free the pipeline's caches (terminal actions done)
+      val notFound = result.notFound.collect().map(_.getString(0))
+      if (notFound.nonEmpty) {
+        System.err.println(s"[homologation] ${notFound.length} importer(s) not matched:")
+        notFound.foreach(n => System.err.println(s"  - $n"))
+      }
+      println(s"""{"published":"$outPath","rows":${result.rows},"years":[$y0,$y1],"importers_not_found":${notFound.length}}""")
+    } finally result.release() // free the pipeline's caches (terminal actions done)
     if (existing.isEmpty) spark.stop()
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.{GraftSession, Tables}
-import graft.ops.{Ann, Dedup, ImporterStandardizer, Multimodal, TextAnalysis}
+import graft.ops.{Ann, Dedup, Multimodal, TextAnalysis}
 import graft.pipeline.Homologation
 import graft.schema.HeaderRules
 import graft.sources.{OrderedScan, ReferenceData}
@@ -229,9 +229,8 @@ object PipelineQueries {
     "p01_hom_pipeline" -> ((s, _) => {
       val catalog = OrderedScan.csvCatalog(
         s, ReferenceData.importerCatalog)
-      val r: ImporterStandardizer.Result =
-        Homologation.pipeline(demoGrid(s), new HeaderRules(), catalog,
-          cache = false) // 3-row demo: persist setup costs more than recompute
+      val r = Homologation.pipeline(demoGrid(s), new HeaderRules(), catalog,
+        cache = false) // 3-row demo: persist setup costs more than recompute
       Homologation.publishProjection(r.standardized)
         .orderBy("MARCA")
     }),

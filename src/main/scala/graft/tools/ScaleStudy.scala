@@ -158,6 +158,14 @@ object ScaledOps {
       else None
     val docs = spark.read.parquet(docsPath)
     val ev = spark.read.parquet(eventsPath)
+    // the ×1 planted Zipf graph (50k nodes, avg out-degree 8, hub ≈ 26k
+    // endpoints) is materialized before timing too, but only when a
+    // graph op is selected
+    val edges =
+      if (Seq("pagerank", "triangles", "link_prediction", "kcore").exists(selected))
+        Some(spark.read.parquet(ScaleData.materializeGraph(
+          spark, 50000L, 8, 1, spark.sparkContext.defaultParallelism)))
+      else None
     def pairs = Dedup.nearDupSizesShingled(
         Dedup.withWordShingles(docs.select("doc_id", "text"), "doc_id", "text", 3),
         "doc_id", numHashes = 64, bands = 16, sizeRatioPrefilter = Some((4, 5)))
@@ -272,20 +280,16 @@ object ScaledOps {
       // entries were measuring tokenization + per-round plan overhead
       // on a toy graph. The planted graph is the same input family as
       // SCALING.md's measured ×1/×4/×20/×50 rung.
-      time("pagerank") { graft.ops.Graph.pageRank(
-        plantedEdges(spark, cpusForGraph(spark)), iters = 3) },
-      time("triangles") { graft.ops.Graph.triangleCount(
-        plantedEdges(spark, cpusForGraph(spark))) },
+      time("pagerank") { graft.ops.Graph.pageRank(edges.get, iters = 3) },
+      time("triangles") { graft.ops.Graph.triangleCount(edges.get) },
       // degCap engaged: the planted 26k-endpoint hub makes UNCAPPED
       // wedge candidates ~deg² ≈ 7·10⁸ per iteration — the degCap
       // valve (drop hub CENTERS before the self-join; "everyone's
       // neighbor" carries no link signal) is the documented at-scale
       // posture, and this entry measures it engaged
       time("link_prediction") { graft.ops.Graph.linkPrediction(
-        plantedEdges(spark, cpusForGraph(spark)), topK = 50,
-        degCap = Some(256L)) },
-      time("kcore") { graft.ops.Graph.kCorePeel(
-        plantedEdges(spark, cpusForGraph(spark)), k = 8, rounds = 3) },
+        edges.get, topK = 50, degCap = Some(256L)) },
+      time("kcore") { graft.ops.Graph.kCorePeel(edges.get, k = 8, rounds = 3) },
       time("growth_accounting") { graft.ops.EventsOps.growthAccounting(ev) },
       // round-10 additions at scale: the banded matching join (hot-block
       // watch) and the L-scaled agreement fold (pure partial aggs)
@@ -421,15 +425,6 @@ object ScaledOps {
       if (selected(RecallKey)) Some(annIvfPqRecall(spark.read.parquet(embPath))) else None
     Some(Tier(scale, evScale, ops, recall))
   }
-
-  /** The ×1 planted Zipf graph (50k nodes, avg out-degree 8, hub ≈ 26k
-    * endpoints), materialized to parquet once per box — the scaled
-    * tier's graph input. */
-  private def plantedEdges(spark: SparkSession, parts: Int): DataFrame =
-    spark.read.parquet(ScaleData.materializeGraph(spark, 50000L, 8, 1, parts))
-
-  private def cpusForGraph(spark: SparkSession): Int =
-    spark.sparkContext.defaultParallelism
 
   private[tools] def ivfPqPipeline(emb: DataFrame, k: Int): DataFrame = {
     val q = emb.where(col("vec_id") < 50)

@@ -83,21 +83,25 @@ class ImporterStandardizerSpec extends AnyFunSuite {
   }
 
   test("standardize equals the lazy left-join / left-anti formulation") {
-    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.{Column, DataFrame}
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions
     import graft.ops.FuzzyJoin
+    import ImporterStandardizer.{Legacy, Normalized, Variant}
     // the fully lazy formulation: every action re-runs the fuzzy match
-    def lazyStandardize(df: DataFrame): (DataFrame, DataFrame) = {
+    def lazyStandardize(df: DataFrame, variant: Variant): (DataFrame, DataFrame) = {
       val names = df.select("IMPORTADOR").where(col("IMPORTADOR").isNotNull).distinct()
       val cat = FuzzyJoin.withPosition(catalog.select("COD_IMP", "NOMBRE_EMP", "RUT"))
-      def strip(c: org.apache.spark.sql.Column) =
-        coalesce(regexp_replace(c, "[\\t\\. \\-]+", ""), lit(""))
-      val mapping = FuzzyJoin.bestMatch(names, "IMPORTADOR", cat, "NOMBRE_EMP",
+      def strip(c: Column) = coalesce(regexp_replace(c, "[\\t\\. \\-]+", ""), lit(""))
+      val best = variant match {
+        case Legacy => FuzzyJoin.bestMatch(names, "IMPORTADOR", cat, "NOMBRE_EMP",
           0.6, inclusive = false,
           scorer = (p, c) => GraftFunctions.similarity_native(strip(p), strip(c)))
-        .select(col("IMPORTADOR"), col("NOMBRE_EMP").as("IMPORTADOR_STD"),
-          col("RUT"), col("COD_IMP").as("IMP_COD"))
+        case Normalized => FuzzyJoin.bestMatch(names, "IMPORTADOR", cat, "NOMBRE_EMP",
+          0.6, inclusive = true, scorer = FuzzyJoin.normalizedRatio)
+      }
+      val mapping = best.select(col("IMPORTADOR"), col("NOMBRE_EMP").as("IMPORTADOR_STD"),
+        col("RUT"), col("COD_IMP").as("IMP_COD"))
       val joined = df.join(broadcast(mapping), Seq("IMPORTADOR"), "left")
         .withColumn("IMPORTADOR", coalesce(col("IMPORTADOR_STD"), col("IMPORTADOR")))
         .drop("IMPORTADOR_STD")
@@ -115,22 +119,74 @@ class ImporterStandardizerSpec extends AnyFunSuite {
         ("zzzz qqqq vvvv", 6),              // unmatched name
         ("zzzz qqqq vvvv", 7)),
       Seq.empty[(String, Int)])             // empty input frame
-    cases.foreach { rows =>
+    for (variant <- Seq(Legacy, Normalized); rows <- cases) {
       val df = rows.toDF("IMPORTADOR", "id")
-      val r = ImporterStandardizer.standardize(df, catalog)
-      val (wantStd, wantNf) = lazyStandardize(df)
-      assert(r.standardized.columns.toSeq == wantStd.columns.toSeq)
-      assert(sortedRows(r.standardized) == sortedRows(wantStd))
-      assert(sortedRows(r.notFound) == sortedRows(wantNf))
+      val r = ImporterStandardizer.standardize(df, catalog, variant = variant)
+      val (wantStd, wantNf) = lazyStandardize(df, variant)
+      assert(r.standardized.schema == wantStd.schema, s"$variant")
+      assert(sortedRows(r.standardized) == sortedRows(wantStd), s"$variant")
+      assert(sortedRows(r.notFound) == sortedRows(wantNf), s"$variant")
       assert(r.standardized.count() == rows.size)
     }
   }
 
-  test("plan uses broadcast joins, not a shuffled fact join") {
-    val df = Seq(("Astara Chile SPA", 1)).toDF("IMPORTADOR", "id")
+  // bestMatchCollected's driver-side top-1 against the distributed
+  // window form, over catalogs whose repeated names tie on score (the
+  // first catalog position must win), at thresholds that every pair
+  // clears (0.0), that only exact names reach (1.0, where the two
+  // variants' inclusive and strict comparisons part), and in between
+  test("the collected top-1 equals bestMatch for both variants") {
+    import org.apache.spark.sql.types.StringType
+    import graft.ops.FuzzyJoin
+    import ImporterStandardizer.{Legacy, Normalized}
+    val rnd = new scala.util.Random(11)
+    val base = Seq("Astara Chile SPA", "BYD Chile SPA", "Automotores Gildemeister SPA",
+      "Kaufmann SA", "Derco SPA")
+    def noisy(s: String): String = s.map(ch => rnd.nextInt(12) match {
+      case 0 => '.'
+      case 1 => ch.toLower
+      case 2 => ' '
+      case _ => ch
+    }).mkString
+    val cat = FuzzyJoin.withPosition(
+      (base ++ Seq(base(0), noisy(base(1)), base(1).toUpperCase, base(0)))
+        .zipWithIndex.map { case (n, i) => (s"C$i", n, s"R$i") }
+        .toDF("COD_IMP", "NOMBRE_EMP", "RUT"))
+    val cases: Seq[Seq[String]] = Seq(
+      Seq(null, base(0), base(0), "zzzz qqqq", noisy(base(2)), ""), // null, repeat, no match
+      Seq.empty[String]) ++
+      (1 to 4).map(_ => Seq.fill(10)(base(rnd.nextInt(base.size))).map(noisy))
+    for (variant <- Seq(Legacy, Normalized); names <- cases; t <- Seq(0.0, 0.6, 0.85, 1.0)) {
+      val want = FuzzyJoin.bestMatch(names.toDF("name"), "name", cat, "NOMBRE_EMP", t,
+          variant.inclusive, variant.scorer)
+        .collect().map(r => Option(r.get(0)) -> r.toSeq.tail).toMap
+      val got = FuzzyJoin.bestMatchCollected(names, StringType, cat, "NOMBRE_EMP", t,
+          variant.inclusive, variant.scorer)
+        .map { case (v, r) => Option(v) -> r.toSeq }
+      assert(got == want, s"$variant at $t over $names")
+    }
+  }
+
+  // The importer mapping is applied as a lookup into a literal map: the
+  // standardized plan neither joins nor exchanges the fact rows.
+  test("standardized plans no join and no fact Exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.{col, when}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val df = spark.range(0, 5000, 1, 4).select(
+      when(col("id") % 3 === 0, "Astara Chile SPA")
+        .when(col("id") % 3 === 1, "zzzz qqqq vvvv").as("IMPORTADOR"), col("id"))
     val r = ImporterStandardizer.standardize(df, catalog)
-    val plan = r.standardized.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"))
-    assert(!plan.contains("SortMergeJoin"))
+    assert(r.standardized.where(col("RUT").isNotNull).count() == 1667)
+    val bad = nodes(r.standardized.queryExecution.executedPlan).filter(n =>
+      n.isInstanceOf[BaseJoinExec] || n.isInstanceOf[Exchange])
+    assert(bad.isEmpty, s"standardized plan holds ${bad.map(_.nodeName)}")
   }
 }

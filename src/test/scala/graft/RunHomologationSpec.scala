@@ -17,13 +17,15 @@ class RunHomologationSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   /** The demo grid written as a raw CSV file, rows ended by `eol`, its
-    * three data rows repeated `copies` times below the header block. */
-  private def demoGridCsv(prefix: String, eol: String, copies: Int = 1): Path = {
+    * three data rows, each passed through `data`, repeated `copies` times
+    * below the header block. */
+  private def demoGridCsv(prefix: String, eol: String, copies: Int = 1,
+      data: Seq[Any] => Seq[Any] = identity): Path = {
     val all = PipelineQueries.demoGrid(spark)
-      .orderBy("_row_idx").drop("_row_idx").collect()
-    val rows = all.take(3) ++ Seq.fill(copies)(all.drop(3)).flatten
+      .orderBy("_row_idx").drop("_row_idx").collect().map(_.toSeq)
+    val rows = all.take(3) ++ Seq.fill(copies)(all.drop(3).map(data)).flatten
     def quote(v: String) = "\"" + v.replace("\"", "\"\"") + "\""
-    val csv = rows.map(_.toSeq.map {
+    val csv = rows.map(_.map {
       case null => ""
       case s: String if s.contains(",") || s.contains("\n") || s.contains("\"") => quote(s)
       case s => s.toString
@@ -98,9 +100,9 @@ class RunHomologationSpec extends AnyFunSuite {
   }
 
   // One run's Spark jobs and the input records its tasks read. The grid
-  // is parsed once (it is persisted before header identification), the
-  // importer lineage is collected once instead of being rebuilt by every
-  // later action, and the year range and row count share one agg. Input
+  // is parsed once (it is persisted before header identification), and
+  // one summary aggregate, one scored importer collect and the write are
+  // the only actions after the forward fill's preview. Input
   // records also count CSV schema inference, the catalog's reads and one
   // record per cached batch read, so the grid is made large enough
   // (303 records) that a second parse would show above all of those.
@@ -152,7 +154,81 @@ class RunHomologationSpec extends AnyFunSuite {
   }
 
   /** Jobs of one RunHomologation run on the demo grid, as measured. */
-  private val MaxJobs = 19
+  private val MaxJobs = 11
+
+  // Every query one run executes, walked into AQE stages and into the
+  // staged table's cached plan: the importer mapping is a literal-map
+  // lookup, so no broadcast hash relation (each pins a
+  // spark.buffer.pageSize page on the driver) is built.
+  test("a RunHomologation run builds no hashed broadcast") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    val group = "hom-broadcast-probe"
+    val flushed = new CountDownLatch(1)
+    val fl = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          flushed.countDown()
+    }
+    val dir = Files.createTempDirectory("hom_broadcasts")
+    spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(fl)
+    try {
+      graft.pipeline.RunHomologation.main(Array(
+        demoGridCsv("grid7", "\n", 20).toString, inlineCatalog(dir).toString,
+        dir.resolve("out").toString))
+      // query-execution events share the listener bus queue with job
+      // events, so once this job's start lands they have all arrived
+      spark.sparkContext.setJobGroup(group, "flush")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(flushed.await(30, TimeUnit.SECONDS))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(fl)
+      spark.listenerManager.unregister(ql)
+    }
+    val broadcasts = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+      .collect { case b: BroadcastExchangeExec => b }
+      .distinctBy(System.identityHashCode)
+    val hashed = broadcasts.filter(_.mode.isInstanceOf[HashedRelationBroadcastMode])
+    info(s"${plans.size} queries, ${broadcasts.size} broadcasts, ${hashed.size} hashed")
+    assert(plans.size > 0)
+    assert(hashed.isEmpty, s"${hashed.size} hashed broadcasts")
+  }
+
+  test("a grid whose data rows hold no AÑO fails naming the grid") {
+    val dir = Files.createTempDirectory("hom_no_year")
+    // every FECHA_HOML is the '-' sentinel, so nothing fills AÑO
+    val grid = demoGridCsv("grid8", "\n", data = _.updated(5, "-"))
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    val e = intercept[IllegalArgumentException] {
+      graft.pipeline.RunHomologation.main(Array(
+        grid.toString, inlineCatalog(dir).toString, dir.resolve("out").toString))
+    }
+    assert(e.getMessage.contains(grid.toString))
+    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+      "a failed run must still release the pipeline's caches")
+    assert(!Files.exists(dir.resolve("out")))
+  }
 
   // The staged chain (headers, forward fill, typed stages) over a
   // scan-ordered grid: the fill is one narrow pass, so nothing below the
