@@ -114,7 +114,15 @@ object GraftSession {
     *  1. A blocking raw-RDD sweep last catches what no plan owns
     *     (`localCheckpoint` and `RDD.persist` blocks, e.g. connected
     *     components' per-round labels), which otherwise stay until the
-    *     ContextCleaner notices and evict later queries' working memory. */
+    *     ContextCleaner notices and evict later queries' working memory.
+    *     Locally checkpointed RDDs are released through
+    *     [[org.apache.spark.sql.graftbridge.RddBridge]], so dropping them
+    *     on purpose logs no "cannot be recomputed" warning per RDD.
+    *
+    * [[graft.sources.SchemaMemo]] is left alone: it holds inferred
+    * schemas (metadata keyed on file stats), not data, is bounded (the
+    * oldest entry is evicted past 256), and its schemas stay valid across
+    * a reset. */
   def reset(s: SparkSession): Unit = {
     memos.synchronized {
       memos.keys.filter(_._1 eq s).toList.foreach { k =>
@@ -122,11 +130,15 @@ object GraftSession {
       }
     }
     s.sharedState.cacheManager.clearCache()
-    s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    s.sparkContext.getPersistentRDDs.values.foreach(
+      org.apache.spark.sql.graftbridge.RddBridge.release)
   }
 }
 
-/** Parquet table loader for the synthetic star schema (TESTDATA.md). */
+/** Parquet table loader for the synthetic star schema (TESTDATA.md).
+  * Each table's schema comes from [[graft.sources.SchemaMemo]], so a
+  * query over tables already read in this JVM, unchanged since, fires no
+  * parquet schema job. */
 object Tables {
   /** Epoch-nanos long → microsecond timestamp. MUST be integral: a double
     * divide carries only 52 mantissa bits, and epoch nanos (~1.7e18)
@@ -156,7 +168,7 @@ object Tables {
     }
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.sources.SchemaMemo.read(spark, "parquet", Map.empty, s"$dir/$name.parquet")
     // events.ts is parquet TIMESTAMP(NANOS) — Spark reads it as a long
     // (spark.sql.legacy.parquet.nanosAsLong); surface it as a proper
     // microsecond timestamp so date/window functions apply.

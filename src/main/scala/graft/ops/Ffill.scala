@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   * The scan-ordered precondition is that the input is partition-ordered:
   * `orderCol` is a non-null integral column, strictly increasing within
   * each partition, and each non-empty partition's range lies above the
-  * ranges of all earlier partitions. `OrderedScan.attachRowIndex` (and
+  * ranges of all earlier partitions. `OrderedScan.csvGrid`'s `_row_idx` (and
   * any filter or projection over it) produces such input; a shuffle
   * (`repartition`, a join) generally does not, and takes the fallback.
   */

@@ -15,15 +15,20 @@ import graft.sources.OrderedScan
   * mapping store round-tripped and a not-found importer report — the
   * fail-fast replacement for the reference's interactive fallback (F25).
   *
-  * A warm run on a 2,000-row grid fires 11 Spark jobs: 3 for the
-  * grid's and the catalog's CSV schemas, the header prefix collect, the
+  * A cold run on a 2,000-row grid fires 11 Spark jobs: 3 for the
+  * grid's and the catalog's CSV schemas (1 for the grid's column count,
+  * 2 for the catalog's inferred types), the header prefix collect, the
   * forward fill's preview, 3 for the pipeline's one summary aggregate
   * (the staged table's first computation, the shuffle-map stage and the
   * result), 2 for the scored importer collect (the catalog's broadcast
-  * and the collect), and the write. The row count, the `AÑO` range and
+  * and the collect), and the write. A warm run, one that re-reads a grid
+  * and a catalog this JVM has read before and that have not changed,
+  * fires 8: the 3 schema jobs go, since both schemas come from
+  * [[graft.sources.SchemaMemo]]. The row count, the `AÑO` range and
   * the not-found names are the pipeline's driver-side results (one row,
-  * ≤ U names), so no action runs after the write. A grid whose data rows hold no `AÑO` fails with an
-  * `IllegalArgumentException` that names it.
+  * ≤ U names), so no action runs after the write. A grid whose data
+  * rows hold no `AÑO` fails with an `IllegalArgumentException` that
+  * names it.
   *
   * Usage: runMain graft.pipeline.RunHomologation
   *   <rawGridCsv> <catalogCsv> <outDir> [mappingJson] [reference|intended]

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Sources and sinks for the homologation pipeline (SURVEY §2 S3/S4/S7/S8).
@@ -11,6 +11,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * reflecting input order. `zipWithIndex` over the scan RDD enumerates
   * rows in split-offset order — i.e. file order — and stays distributed
   * (one pass, no shuffle; the index is computed from per-partition counts).
+  * File reads without an explicit schema take their inferred schema from
+  * [[SchemaMemo]], so re-reading an unchanged grid or catalog plans
+  * without an inference job.
   */
 object OrderedScan {
 
@@ -38,41 +41,56 @@ object OrderedScan {
 
   /** S3-fallback: read a headerless all-string grid (a pre-converted
     * CSV of a sheet; [[xlsSheets]] reads the binary workbook directly) as
-    * `_c0.._cN` StringType columns plus `_row_idx` in file order. */
+    * `_c0.._cN` StringType columns plus `_row_idx` in file order. The
+    * column count comes from [[SchemaMemo]], so a re-read of an unchanged
+    * file fires no inference job.
+    *
+    * Each cell is cleaned in the same pass that attaches its index: CRLF
+    * grids leave the '\r' inside the final cell of each record (the
+    * multiLine parser keeps it), which silently turns empty cells
+    * non-null and wrecks header-level detection, so a trailing `\r$` is
+    * stripped and an empty cell becomes null. `$` also matches before a
+    * final line terminator, so a quoted cell ending in "\r\n" keeps only
+    * its "\n". Doing this in the Row map, not as a Catalyst projection
+    * over every column, keeps a ~40-column grid clear of a generated
+    * method too large for the JIT to compile. */
   def csvGrid(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
-    val raw = spark.read
-      .option("header", "false")
-      .option("delimiter", delimiter)
-      .option("nullValue", "")
+    val raw = SchemaMemo.read(spark, "csv", Map(
+      "header" -> "false",
+      "delimiter" -> delimiter,
+      "nullValue" -> "",
       // header cells in the 3CV workbook contain embedded newlines;
       // multiLine keeps them inside one logical row (sheet grids are
       // driver-converted and modest, so the single-split read is fine)
-      .option("multiLine", "true")
-      .csv(path)
-    // CRLF grids: the multiLine parser leaves the '\r' inside the final
-    // cell of each record, which silently turns empty cells non-null and
-    // wrecks header-level detection — strip it and re-null empties
-    val cleaned = raw.select(raw.columns.map { c =>
-      val v = regexp_replace(col(c), "\r$", "")
-      when(length(v) === 0, lit(null)).otherwise(v).as(c)
-    }: _*)
-    attachRowIndex(cleaned)
+      "multiLine" -> "true"), path)
+    val schema = StructType(raw.schema.fields :+ StructField(RowIdx, LongType, nullable = false))
+    // zipWithIndex numbers rows in split-offset (file) order from
+    // per-partition counts: distributed, one pass, no shuffle
+    val rows = raw.rdd.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq((0 until r.length).map { c =>
+        val v = r.getString(c)
+        if (v == null) null
+        else {
+          val s = TrailingCr.matcher(v).replaceAll("")
+          if (s.isEmpty) null else s
+        }
+      } :+ i)
+    }
+    spark.createDataFrame(rows, schema)
   }
 
-  /** S4: catalog CSV with header + explicit schema honoring. Lines that
-    * start with `#` are comments (the vendored fixture's provenance note;
-    * see [[ReferenceData]]). */
+  private val TrailingCr = java.util.regex.Pattern.compile("\r$")
+
+  /** S4: catalog CSV with header + explicit schema honoring, else an
+    * inferred schema through [[SchemaMemo]]. Lines that start with `#`
+    * are comments (the vendored fixture's provenance note; see
+    * [[ReferenceData]]). */
   def csvCatalog(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read.option("header", "true").option("comment", "#")
-    schema.map(r.schema).getOrElse(r.option("inferSchema", "true")).csv(path)
-  }
-
-  /** Attach `_row_idx` preserving the DataFrame's current row order.
-    * Distributed: RDD zipWithIndex (two narrow passes, no shuffle). */
-  def attachRowIndex(df: DataFrame, idxCol: String = RowIdx): DataFrame = {
-    val schema = StructType(df.schema.fields :+ StructField(idxCol, LongType, nullable = false))
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val options = Map("header" -> "true", "comment" -> "#")
+    schema match {
+      case Some(s) => spark.read.options(options).schema(s).csv(path)
+      case None => SchemaMemo.read(spark, "csv", options + ("inferSchema" -> "true"), path)
+    }
   }
 
   /** In-memory grid (rows of nullable strings) → ordered DataFrame; used

@@ -3,6 +3,11 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, length, lit, regexp_replace, when}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.GraftSession
@@ -57,6 +62,57 @@ class RunHomologationSpec extends AnyFunSuite {
     a.zip(b).foreach { case (x, y) => assert(x == y, s"$x != $y") }
   }
 
+  /** The grid reader as a Catalyst projection over every column
+    * (regexp_replace of "\r$", then empty to null) under a separate
+    * row-index pass: the oracle the single-pass clean in `csvGrid` must
+    * equal. */
+  private def projectedGrid(path: String): DataFrame = {
+    val raw = spark.read.option("header", "false").option("delimiter", ",")
+      .option("nullValue", "").option("multiLine", "true").csv(path)
+    val cleaned = raw.select(raw.columns.map { c =>
+      val v = regexp_replace(col(c), "\r$", "")
+      when(length(v) === 0, lit(null)).otherwise(v).as(c)
+    }: _*)
+    val schema = StructType(cleaned.schema.fields :+
+      StructField(OrderedScan.RowIdx, LongType, nullable = false))
+    spark.createDataFrame(
+      cleaned.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }, schema)
+  }
+
+  /** A cell and whether to quote it (cells holding '\n', ',' or '"' are
+    * always quoted). */
+  private val cellGen: Gen[(String, Boolean)] = Gen.zip(Gen.frequency(
+    3 -> Gen.oneOf("a", "b c", "2013"),
+    2 -> Gen.const(""),
+    1 -> Gen.const("\r"),
+    2 -> Gen.oneOf("x\r", "x\r\n", "x\r\r", "\r\r", "\r\n"),
+    2 -> Gen.oneOf("l1\nl2", "l1\r\nl2", "l1\r\nl2\r", "q,\"r\"")),
+    Gen.oneOf(true, false))
+  private val gridGen = for {
+    eol <- Gen.oneOf("\n", "\r\n")
+    nRows <- Gen.choose(1, 6)
+    rows <- Gen.listOfN(nRows, Gen.choose(1, 5).flatMap(Gen.listOfN(_, cellGen)))
+  } yield (eol, rows)
+
+  test("property: csvGrid's single-pass clean equals the projected clean") {
+    def quote(v: String) = "\"" + v.replace("\"", "\"\"") + "\""
+    def rows(df: DataFrame) = df.orderBy(OrderedScan.RowIdx).collect().map(_.toSeq).toSeq
+    val prop = Prop.forAllNoShrink(gridGen) { case (eol, cells) =>
+      val text = cells.map(_.map { case (v, q) =>
+        if (q || v.exists(c => c == '\n' || c == ',' || c == '"')) quote(v) else v
+      }.mkString(",")).mkString("", eol, eol)
+      val f = Files.createTempFile("grid_clean", ".csv")
+      Files.writeString(f, text)
+      val expected = projectedGrid(f.toString)
+      // the first read infers the schema, the second takes it from the memo
+      val reads = Seq.fill(2)(OrderedScan.csvGrid(spark, f.toString))
+      reads.forall(g => g.schema == expected.schema && rows(g) == rows(expected))
+    }
+    val result = Test.check(Test.Parameters.default
+      .withMinSuccessfulTests(40).withInitialSeed(Seed(20261020L)), prop)
+    assert(result.passed, result.status.toString)
+  }
+
   // A repeated run finds the first run's generated classes in the codegen
   // cache that GraftSession sizes (the conf assertion pins the size). How
   // many the first run compiles depends on which specs warmed the cache
@@ -105,7 +161,9 @@ class RunHomologationSpec extends AnyFunSuite {
   // the only actions after the forward fill's preview. Input
   // records also count CSV schema inference, the catalog's reads and one
   // record per cached batch read, so the grid is made large enough
-  // (303 records) that a second parse would show above all of those.
+  // (303 records) that a second parse would show above all of those. A
+  // second run on the same unchanged files takes both CSV schemas from
+  // SchemaMemo, so its 3 inference jobs go.
   test("a RunHomologation run reads the grid once and fires a bounded number of jobs") {
     import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
     import java.util.concurrent.atomic.AtomicLong
@@ -115,46 +173,55 @@ class RunHomologationSpec extends AnyFunSuite {
     val gridRecords = 3 + 3 * copies // header block + data rows
     val dir = Files.createTempDirectory("hom_jobs")
     val catalog = inlineCatalog(dir)
-    val group = "hom-jobs-probe"
-    val jobs = new AtomicLong
-    val records = new AtomicLong
-    val flushed = new CountDownLatch(1)
-    val stages = ConcurrentHashMap.newKeySet[Int]()
-    def inGroup(p: java.util.Properties, g: String) =
-      Option(p).exists(_.getProperty("spark.jobGroup.id") == g)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        if (inGroup(j.properties, group)) {
-          jobs.incrementAndGet(); j.stageIds.foreach(stages.add)
+    /** (jobs, input records) of one run. */
+    def probe(run: String): (Long, Long) = {
+      val group = s"hom-jobs-probe-$run"
+      val jobs = new AtomicLong
+      val records = new AtomicLong
+      val flushed = new CountDownLatch(1)
+      val stages = ConcurrentHashMap.newKeySet[Int]()
+      def inGroup(p: java.util.Properties, g: String) =
+        Option(p).exists(_.getProperty("spark.jobGroup.id") == g)
+      val l = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit = {
+          if (inGroup(j.properties, group)) {
+            jobs.incrementAndGet(); j.stageIds.foreach(stages.add)
+          }
+          if (inGroup(j.properties, group + "-flush")) flushed.countDown()
         }
-        if (inGroup(j.properties, group + "-flush")) flushed.countDown()
+        override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+          if (stages.contains(t.stageId) && t.taskMetrics != null)
+            records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
       }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (stages.contains(t.stageId) && t.taskMetrics != null)
-          records.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
+      spark.sparkContext.addSparkListener(l)
+      try {
+        spark.sparkContext.setJobGroup(group, "RunHomologation probe")
+        graft.pipeline.RunHomologation.main(Array(
+          grid.toString, catalog.toString, dir.resolve(run).toString))
+        // flush marker: the listener bus is FIFO, so once this job's start
+        // lands every event of the run before it has been delivered
+        spark.sparkContext.setJobGroup(group + "-flush", "flush")
+        spark.sparkContext.parallelize(Seq(1), 1).count()
+        assert(flushed.await(30, TimeUnit.SECONDS))
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(l)
+      }
+      (jobs.get, records.get)
     }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.sparkContext.setJobGroup(group, "RunHomologation probe")
-      graft.pipeline.RunHomologation.main(Array(
-        grid.toString, catalog.toString, dir.resolve("out").toString))
-      // flush marker: the listener bus is FIFO, so once this job's start
-      // lands every event of the run before it has been delivered
-      spark.sparkContext.setJobGroup(group + "-flush", "flush")
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      assert(flushed.await(30, TimeUnit.SECONDS))
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(l)
+    for ((run, maxJobs) <- Seq("cold" -> MaxJobs, "warm" -> MaxWarmJobs)) {
+      val (jobs, records) = probe(run)
+      info(s"$run run: jobs $jobs, input records $records (grid $gridRecords)")
+      assert(jobs <= maxJobs, s"$run run: $jobs jobs, pinned at most $maxJobs")
+      assert(records >= gridRecords && records < 2 * gridRecords,
+        s"$run run read $records input records; one parse of the grid is $gridRecords")
     }
-    info(s"jobs ${jobs.get}, input records ${records.get} (grid $gridRecords)")
-    assert(jobs.get <= MaxJobs, s"${jobs.get} jobs, pinned at most $MaxJobs")
-    assert(records.get >= gridRecords && records.get < 2 * gridRecords,
-      s"read ${records.get} input records; one parse of the grid is $gridRecords")
   }
 
-  /** Jobs of one RunHomologation run on the demo grid, as measured. */
+  /** Jobs of one RunHomologation run on the demo grid, as measured: the
+    * first run over new files, then a re-run over the same files. */
   private val MaxJobs = 11
+  private val MaxWarmJobs = 8
 
   // Every query one run executes, walked into AQE stages and into the
   // staged table's cached plan: the importer mapping is a literal-map

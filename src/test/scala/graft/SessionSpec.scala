@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -77,6 +78,31 @@ class SessionSpec extends AnyFunSuite {
     assert(rebuilt.storageLevel == StorageLevel.MEMORY_AND_DISK)
     assert(cached(rebuilt), "the rebuilt memo must be cached again, not recomputed per use")
     GraftSession.reset(spark)
+  }
+
+  // Four suite queries whose generated classes together exceed Spark's
+  // default cache of 100 entries: 151 at sf0.001 on their first run in a
+  // JVM. At 100 entries the LRU evicts each class before the next pass
+  // needs it, so the second pass recompiles; at CodegenCacheEntries it
+  // compiles none. Each pass starts from reset, and AQE is off so both
+  // run the same physical plans (AQE re-plans as query stages finish,
+  // and their order varies run to run).
+  test("the codegen cache holds a working set above Spark's default of 100 classes") {
+    val dir = "/root/testdata/sf0.001"
+    val names = Seq("p112_containment", "p130_rfm", "p158_cardinality_profile", "p254_isotonic")
+    def pass(): Long = {
+      GraftSession.reset(spark)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      names.foreach(n => SparkEntry.queries(n)(spark, dir).write.mode("overwrite").format("noop").save())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val aqe = "spark.sql.adaptive.enabled"
+    val old = spark.conf.get(aqe)
+    val (first, second) =
+      try { spark.conf.set(aqe, "false"); (pass(), pass()) }
+      finally { spark.conf.set(aqe, old); GraftSession.reset(spark) }
+    info(s"Janino compiles: first pass $first, second pass $second")
+    assert(second == 0, s"first pass compiled $first classes, the second $second")
   }
 
   test("tune is one idempotent injection point for the optimizer rule and the SQL functions") {
