@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
@@ -385,10 +386,15 @@ object GraftFunctions {
       exprs(1).eval().asInstanceOf[Int]).toAggregateExpression()))
 
   /** Make the functions above SQL-callable on a session;
-    * [[graft.engine.GraftSession.tune]] calls this. */
-  def register(spark: SparkSession): Unit =
+    * [[graft.engine.GraftSession.tune]] calls this. A name the session's
+    * registry already holds is skipped, so a repeated call replaces
+    * nothing (and logs no "replaced a previously registered function"
+    * warning per name). */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     registrations.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

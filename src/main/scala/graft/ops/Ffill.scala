@@ -1,9 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.graftbridge.RddBridge
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** W1: forward-fill over an explicit order column — the Spark form of the
   * reference's `df[col].ffill()` over file order
@@ -19,7 +22,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
   *  - over input that is already in scan order it runs [[ffillScanOrdered]]:
   *    a preview collect of one summary row per partition, then one narrow
   *    per-partition pass that starts from the carry of the earlier
-  *    partitions — no shuffle, window or broadcast;
+  *    partitions — no shuffle, window or broadcast. Both passes read and
+  *    build Catalyst rows, so no `Row` encoder runs;
   *  - otherwise it falls back to [[ffillBlocked]]'s two-pass fill: (1)
   *    within-block fill over `floor(order / blockSize)` blocks in
   *    parallel, (2) a per-block "last non-null" summary — thousands of
@@ -103,7 +107,8 @@ object Ffill {
 
   /** One partition's preview row: its first and last `orderCol` value,
     * whether `orderCol` is non-null and strictly increasing through it,
-    * and the last non-null value of each filled column (null if none). */
+    * and the last non-null value of each filled column (null if none), as
+    * Catalyst values copied out of the scan's reused row. */
   private final case class Span(first: Long, last: Long, increasing: Boolean, lastVals: Array[Any])
 
   /** Scan-ordered fill (see object doc), or `None` when the preview shows
@@ -112,18 +117,31 @@ object Ffill {
     * order it relies on — each partition's `orderCol` must still run
     * strictly increasing from the previewed first to the previewed last
     * value — and throws `IllegalStateException` if the input's order
-    * changed between the two passes. */
+    * changed between the two passes.
+    *
+    * Both passes read the input's Catalyst rows (`queryExecution.toRdd`),
+    * and the filled rows go back through
+    * [[org.apache.spark.sql.graftbridge.RddBridge.internalDataFrame]], so
+    * no `Row` is encoded or decoded. The scan reuses its row buffer, so a
+    * value that outlives its row (a preview's last value, a carried fill
+    * value) is copied (`InternalRow.copyValue`); the other cells of a
+    * filled row are passed through in place, since the scan of the
+    * filled rows' `LogicalRDD` projects each one into its own buffer
+    * before the fill reads the next input row. */
   def ffillScanOrdered(df: DataFrame, orderCol: String, cols: Seq[String]): Option[DataFrame] = {
     val schema = df.schema
     val oi = schema.fieldIndex(orderCol)
     val ci = cols.map(schema.fieldIndex).toArray
-    val integral = schema(oi).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
+    val index: (InternalRow, Int) => Long = schema(oi).dataType match {
+      case ByteType => _.getByte(_).toLong
+      case ShortType => _.getShort(_).toLong
+      case IntegerType => _.getInt(_).toLong
+      case LongType => _.getLong(_)
+      case _ => return None
     }
-    if (!integral) return None
-    val rows = df.rdd
-    val spans = rows.mapPartitions(it => Iterator.single(preview(it, oi, ci))).collect()
+    val types = schema.fields.map(_.dataType)
+    val rows = df.queryExecution.toRdd
+    val spans = rows.mapPartitions(it => Iterator.single(preview(it, index, oi, ci, types))).collect()
     val present = spans.flatten
     val ordered = present.forall(_.increasing) &&
       present.lazyZip(present.drop(1)).forall((a, b) => a.last < b.first)
@@ -135,11 +153,16 @@ object Ffill {
     }
     val ranges = spans.map(_.map(s => (s.first, s.last)))
     val filled = rows.mapPartitionsWithIndex((p, it) =>
-      fillPartition(it, carries(p), ranges(p), oi, ci))
-    Some(df.sparkSession.createDataFrame(filled, schema))
+      fillPartition(it, carries(p), ranges(p), index, oi, ci, types))
+    Some(RddBridge.internalDataFrame(df.sparkSession, filled, schema))
   }
 
-  private def preview(it: Iterator[Row], oi: Int, ci: Array[Int]): Option[Span] = {
+  private def preview(
+      it: Iterator[InternalRow],
+      index: (InternalRow, Int) => Long,
+      oi: Int,
+      ci: Array[Int],
+      types: Array[DataType]): Option[Span] = {
     if (!it.hasNext) return None
     val lastVals = new Array[Any](ci.length)
     var first, prev = 0L
@@ -148,13 +171,14 @@ object Ffill {
     it.foreach { r =>
       if (r.isNullAt(oi)) increasing = false
       else {
-        val i = r.getAs[Number](oi).longValue
+        val i = index(r, oi)
         if (!seen) first = i else if (i <= prev) increasing = false
         prev = i; seen = true
       }
       var j = 0
       while (j < ci.length) {
-        if (!r.isNullAt(ci(j))) lastVals(j) = r.get(ci(j))
+        val c = ci(j)
+        if (!r.isNullAt(c)) lastVals(j) = InternalRow.copyValue(r.get(c, types(c)))
         j += 1
       }
     }
@@ -162,11 +186,13 @@ object Ffill {
   }
 
   private def fillPartition(
-      it: Iterator[Row],
+      it: Iterator[InternalRow],
       carry: Array[Any],
       range: Option[(Long, Long)],
+      index: (InternalRow, Int) => Long,
       oi: Int,
-      ci: Array[Int]): Iterator[Row] = new Iterator[Row] {
+      ci: Array[Int],
+      types: Array[DataType]): Iterator[InternalRow] = new Iterator[InternalRow] {
     private val state = carry.clone()
     private var seen = false
     private var prev = 0L
@@ -182,21 +208,26 @@ object Ffill {
       more
     }
 
-    def next(): Row = {
+    def next(): InternalRow = {
       val r = it.next()
       if (r.isNullAt(oi)) changed("null index")
-      val i = r.getAs[Number](oi).longValue
+      val i = index(r, oi)
       if (!seen && !range.exists(_._1 == i)) changed(s"first index $i, preview $range")
       if (seen && i <= prev) changed(s"index $i after $prev")
       prev = i; seen = true
-      val vals = r.toSeq.toArray
+      val vals = new Array[Any](types.length)
+      var c = 0
+      while (c < types.length) {
+        if (!r.isNullAt(c)) vals(c) = r.get(c, types(c))
+        c += 1
+      }
       var j = 0
       while (j < ci.length) {
         val c = ci(j)
-        if (vals(c) == null) vals(c) = state(j) else state(j) = vals(c)
+        if (vals(c) == null) vals(c) = state(j) else state(j) = InternalRow.copyValue(vals(c))
         j += 1
       }
-      Row.fromSeq(vals)
+      new GenericInternalRow(vals)
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -15,18 +17,58 @@ object CompatMode {
   case object Intended extends CompatMode
 }
 
-/** The typed column-transform layer (SURVEY §2 F1–F12, A1, A3) as pure
-  * `DataFrame => DataFrame` stages, composable with `df.transform(...)`.
-  * Each stage mirrors a function in
-  * /root/reference/src/transform_pipeline.py (cited per stage) but is
-  * expressed as lazy Catalyst expressions: constant-foldable CASE trees
-  * and coerce-to-null casts, so those stages stay inside whole-stage
-  * codegen. The one order-dependent step, the forward fill in
-  * [[fillSentinels]], is [[Ffill.ffill]]: over scan-ordered input a
-  * per-partition pass seeded by a ≤ #partitions-row preview, else a
-  * partition-parallel blocked window fill.
+/** The typed column-transform layer (SURVEY §2 F1–F12, A1, A3). Each
+  * stage mirrors a function in the reference's src/transform_pipeline.py
+  * (cited per stage) and is written once, as column definitions: a
+  * [[ColumnStage]] of lazy Catalyst expressions (constant-foldable CASE
+  * trees and coerce-to-null casts) over its input's columns. The
+  * `DataFrame => DataFrame` functions, composable with
+  * `df.transform(...)`, are thin wrappers that apply one definition
+  * ([[applyStage]]); [[graft.pipeline.Homologation.pipeline]] composes
+  * all of them into two wide projections ([[layered]]). The one
+  * order-dependent step, the forward fill in [[fillSentinels]], is
+  * [[Ffill.ffill]]: over scan-ordered input a per-partition pass seeded
+  * by a ≤ #partitions-row preview, else a partition-parallel blocked
+  * window fill.
   */
 object Stages {
+
+  /** One stage as column definitions: `convert` rewrites columns in
+    * place, each from its own current value, and `derive` adds columns
+    * (or replaces them, as `withColumn` does) from the input's columns
+    * after this stage's conversions. */
+  final case class ColumnStage(
+      convert: Seq[(String, Column => Column)] = Nil,
+      derive: Seq[(String, Column)] = Nil)
+
+  /** One stage on its own: a projection of its conversions, then one of
+    * its derivations (an empty half adds none). */
+  private def applyStage(df: DataFrame, stage: ColumnStage): DataFrame =
+    project(project(df, stage.convert.map { case (c, f) => c -> f(col(c)) }), stage.derive)
+
+  /** `stages` in order as two projections: every column's conversions
+    * composed in stage order, then every derivation over the converted
+    * columns. This equals applying them one by one
+    * (`stages.foldLeft(df)(applyStage)`) as long as no stage derives
+    * from a column that a later stage converts, and no stage reads a
+    * column that a stage derives, which holds for the homologation
+    * stages ([[graft.pipeline.Homologation.stages]]). Each projection
+    * is an analyzer pass on the driver: composed, the homologation stages
+    * take 2, applied one by one 14. */
+  def layered(df: DataFrame, stages: Seq[ColumnStage]): DataFrame = {
+    val converted = stages.flatMap(_.convert).foldLeft(ListMap.empty[String, Column]) {
+      case (m, (c, f)) => m.updated(c, f(m.getOrElse(c, col(c))))
+    }
+    project(project(df, converted.toSeq), stages.flatMap(_.derive))
+  }
+
+  /** `defs` in one projection, each replacing its column in place or
+    * appended in order. A per-column `withColumn` fold adds one Project
+    * (and one full analyzer pass) per column — on the ~100-column
+    * pipeline that driver-side plan-compile tax dominated small-grid
+    * latency. */
+  private def project(df: DataFrame, defs: Seq[(String, Column)]): DataFrame =
+    if (defs.isEmpty) df else df.withColumns(ListMap(defs: _*))
 
   /** F1: sentinel `'-'` → NULL (transform_pipeline.py:38,50,122,143). */
   def sentinelToNull(c: Column, sentinel: String = "-"): Column =
@@ -38,8 +80,8 @@ object Stages {
     * under a caller-provided ANSI session. */
   def tryDouble(c: Column): Column = c.try_cast("double")
 
-  private def tryDoubleOf(name: String): Column =
-    nullif(col(name), lit("-")).try_cast("double")
+  /** [[tryDouble]] after `'-'` → NULL. */
+  private def tryDoubleOf(c: Column): Column = nullif(c, lit("-")).try_cast("double")
 
   /** The fill half of transform_datetime and transform_pbv
     * (transform_pipeline.py:38-39,50-51): `'-'`→NULL in each of `columns`,
@@ -51,23 +93,26 @@ object Stages {
       df: DataFrame,
       columns: Seq[String],
       orderCol: String = "_row_idx"): DataFrame =
-    Ffill.ffill(
-      df.withColumns(columns.map(c => c -> sentinelToNull(col(c))).toMap),
-      orderCol, columns)
+    Ffill.ffill(project(df, columns.map(c => c -> sentinelToNull(col(c)))), orderCol, columns)
 
   /** The derive half of transform_datetime (transform_pipeline.py:40-43):
     * cast to timestamp, derive AÑO. */
+  def datetime(column: String = "FECHA_HOML", yearCol: String = "AÑO"): ColumnStage =
+    ColumnStage(Seq(column -> ((c: Column) => to_timestamp(c))), Seq(yearCol -> year(col(column))))
+
   def deriveDatetime(
       df: DataFrame,
       column: String = "FECHA_HOML",
       yearCol: String = "AÑO"): DataFrame =
-    df.withColumn(column, to_timestamp(col(column)))
-      .withColumn(yearCol, year(col(column)))
+    applyStage(df, datetime(column, yearCol))
 
   /** The derive half of transform_pbv (transform_pipeline.py:52): to
     * numeric. */
+  def pbv(column: String = "PESO_BRUTO_VH_KG"): ColumnStage =
+    ColumnStage(Seq(column -> tryDouble _))
+
   def derivePbv(df: DataFrame, column: String = "PESO_BRUTO_VH_KG"): DataFrame =
-    df.withColumn(column, tryDouble(col(column)))
+    applyStage(df, pbv(column))
 
   /** transform_datetime (transform_pipeline.py:34-43): `'-'`→NULL, ffill
     * over file order, cast to date, derive AÑO. */
@@ -86,29 +131,26 @@ object Stages {
       orderCol: String = "_row_idx"): DataFrame =
     derivePbv(fillSentinels(df, Seq(column), orderCol), column)
 
-  /** Replace `targets` in place via one `select` projection. A
-    * per-column `withColumn` fold adds one Project (and one full
-    * analyzer pass) per column — on the ~100-derived-column pipeline
-    * that driver-side plan-compile tax dominated small-grid latency. */
-  private def replaceColumns(df: DataFrame, targets: Set[String])(
-      f: String => Column): DataFrame =
-    if (targets.isEmpty) df
-    else df.select(df.columns.toIndexedSeq.map(c =>
-      if (targets(c)) f(c).as(c) else col(c)): _*)
-
   /** transform_category_cols (transform_pipeline.py:55-66): NULL→"",
-    * lower, unaccent, trim — for each present column (one projection). */
+    * lower, unaccent, trim — for each of `columns` that the input's
+    * `inputCols` hold. */
+  def categoryCols(columns: Seq[String], inputCols: Seq[String]): ColumnStage =
+    ColumnStage(columns.filter(inputCols.contains).map(_ ->
+      ((c: Column) => TextFunctions.normalizeCategory(coalesce(c, lit(""))))))
+
   def transformCategoryCols(df: DataFrame, columns: Seq[String]): DataFrame =
-    replaceColumns(df, columns.filter(df.columns.contains).toSet)(c =>
-      TextFunctions.normalizeCategory(coalesce(col(c), lit(""))))
+    applyStage(df, categoryCols(columns, df.columns))
 
   /** transform_combustible (transform_pipeline.py:68-74): lower+unaccent,
     * empty→"electrico". */
-  def transformCombustible(df: DataFrame, column: String = "COMBUSTIBLE"): DataFrame =
-    df.withColumn(column, {
-      val v = TextFunctions.unaccent(lower(col(column)))
+  def combustible(column: String = "COMBUSTIBLE"): ColumnStage =
+    ColumnStage(Seq(column -> { (c: Column) =>
+      val v = TextFunctions.unaccent(lower(c))
       when(v === "", "electrico").otherwise(v)
-    })
+    }))
+
+  def transformCombustible(df: DataFrame, column: String = "COMBUSTIBLE"): DataFrame =
+    applyStage(df, combustible(column))
 
   /** F11: transform_categoria (transform_pipeline.py:77-89) — propulsion
     * string → bev/ice/hev/h2/phev, default empty string. */
@@ -121,22 +163,31 @@ object Stages {
                    "electrico hibrido con recarga exterior"), "phev")
       .otherwise("")
 
+  def categoria(
+      column: String = "PROPULSION",
+      newcol: String = "CATEGORIA_PROPULSION"): ColumnStage =
+    ColumnStage(derive = Seq(newcol -> propulsionCategory(col(column))))
+
   def transformCategoria(
       df: DataFrame,
       column: String = "PROPULSION",
       newcol: String = "CATEGORIA_PROPULSION"): DataFrame =
-    df.withColumn(newcol, propulsionCategory(col(column)))
+    applyStage(df, categoria(column, newcol))
 
   /** F11: transform_tipe_ldv (transform_pipeline.py:188-193) — gross
     * weight → liviano/mediano (NULL above 3860, like the reference). */
+  def tipoLdv(
+      column: String = "PESO_BRUTO_VH_KG",
+      newcol: String = "TIPO_LDV"): ColumnStage =
+    ColumnStage(Seq(column -> ((c: Column) => c.cast("double"))), Seq(newcol ->
+      when(col(column) < 2700, "liviano")
+        .when(col(column) >= 2700 && col(column) < 3860, "mediano")))
+
   def transformTipoLdv(
       df: DataFrame,
       column: String = "PESO_BRUTO_VH_KG",
       newcol: String = "TIPO_LDV"): DataFrame =
-    df.withColumn(column, col(column).cast("double"))
-      .withColumn(newcol,
-        when(col(column) < 2700, "liviano")
-          .when(col(column) >= 2700 && col(column) < 3860, "mediano"))
+    applyStage(df, tipoLdv(column, newcol))
 
   // ------------------------------------------------------------------
   // F12: column-keyed dispatch trees (get_rend_equiv / get_co2_emiss)
@@ -190,26 +241,26 @@ object Stages {
     * quirk b's loop-carried overwrite, gasolina/hibrido in Reference
     * mode) else by PROPULSION; factor chosen by COMBUSTIBLE; value
     * assigned only when both keys match; round(2). Also materializes the
-    * numeric form of every touched source column, as the reference does. */
-  def rendEquiv(
-      df: DataFrame,
+    * numeric form of every touched source column among `inputCols`, as
+    * the reference does. */
+  def rend(
+      inputCols: Seq[String],
       newcol: String = "REND_EQUIV_KML",
-      mode: CompatMode = CompatMode.Reference): DataFrame = {
+      mode: CompatMode = CompatMode.Reference): ColumnStage = {
     val props = propRendSource(mode)
     val factors = combFactor(mode)
     val overrideCombs = mode match {
       case CompatMode.Reference => Seq("gasolina/glp", "gasolina/gnc", "gasolina/hibrido")
       case CompatMode.Intended  => Seq("gasolina/glp", "gasolina/gnc")
     }
-    val touched = (props.values.toSeq :+ glpCol).distinct.filter(df.columns.contains)
-    val withNumeric = replaceColumns(df, touched.toSet)(tryDoubleOf)
+    val touched = (props.values.toSeq :+ glpCol).distinct.filter(inputCols.contains)
 
     val srcVal: Column = {
-      val byProp = props.filter { case (_, c) => df.columns.contains(c) }
+      val byProp = props.filter { case (_, c) => inputCols.contains(c) }
         .foldLeft(lit(null).cast("double")) { case (acc, (p, c)) =>
           when(col("PROPULSION") === p, col(c)).otherwise(acc)
         }
-      if (df.columns.contains(glpCol))
+      if (inputCols.contains(glpCol))
         when(col("COMBUSTIBLE").isin(overrideCombs: _*), col(glpCol)).otherwise(byProp)
       else byProp
     }
@@ -217,17 +268,21 @@ object Stages {
       case (acc, (comb, f)) => when(col("COMBUSTIBLE") === comb, lit(f)).otherwise(acc)
     }
     val propOk = col("PROPULSION").isin(props.keys.toSeq: _*)
-    withNumeric.withColumn(newcol,
-      round(when(propOk && factor.isNotNull, srcVal * factor), 2))
+    ColumnStage(touched.map(_ -> tryDoubleOf _),
+      Seq(newcol -> round(when(propOk && factor.isNotNull, srcVal * factor), 2)))
   }
+
+  def rendEquiv(
+      df: DataFrame,
+      newcol: String = "REND_EQUIV_KML",
+      mode: CompatMode = CompatMode.Reference): DataFrame =
+    applyStage(df, rend(df.columns, newcol, mode))
 
   /** get_co2_emiss (transform_pipeline.py:132-151): COMBUSTIBLE → source
     * CO₂ column; the `"vehiculo electrico"` zeroing branch is dead in the
     * reference (key absent from the map) — BEV zeroing happens in
     * [[bevZeroAndImpute]], matching transform_pipeline.py:243. */
-  def co2Equiv(
-      df: DataFrame,
-      newcol: String = "EMIS_CO2_EQUIV"): DataFrame = {
+  def co2(inputCols: Seq[String], newcol: String = "EMIS_CO2_EQUIV"): ColumnStage = {
     val mapping = Seq(
       "diesel" -> "EMIS_CO2_GKM",
       "gasolina" -> "EMIS_CO2_GKM",
@@ -236,18 +291,24 @@ object Stages {
       "electrico" -> "EMIS_CO2_GKM",
       "gasolina/hibrido" -> "CO2_PHEV_REND_PONDERADO_VH_GKM",
       "hidrogeno" -> "EMIS_CO2_GKM")
-    val present = mapping.filter { case (_, c) => df.columns.contains(c) }
-    val withNumeric = replaceColumns(df, present.map(_._2).toSet)(tryDoubleOf)
+    val present = mapping.filter { case (_, c) => inputCols.contains(c) }
     val value = present.foldLeft(lit(null).cast("double")) {
       case (acc, (comb, c)) => when(col("COMBUSTIBLE") === comb, col(c)).otherwise(acc)
     }
-    withNumeric.withColumn(newcol, value)
+    ColumnStage(present.map(_._2).distinct.map(_ -> tryDoubleOf _), Seq(newcol -> value))
   }
+
+  def co2Equiv(
+      df: DataFrame,
+      newcol: String = "EMIS_CO2_EQUIV"): DataFrame =
+    applyStage(df, co2(df.columns, newcol))
 
   /** A3: get_gases_emissions (transform_pipeline.py:195-214) — per-gas
     * row-wise mean with pandas semantics: NaN counts as 0 and the
-    * denominator is the FIXED column count, not the non-null count. */
-  def gasesEmissions(df: DataFrame): DataFrame = {
+    * denominator is the FIXED column count, not the non-null count. A gas
+    * with no source among `inputCols` is left out; a gas target already
+    * present is replaced in place. */
+  def gases(inputCols: Seq[String]): ColumnStage = {
     val gases = Seq(
       "N2O_GKM" -> Seq("N2O_EMISION_EPA"),
       "MP_GKM" -> Seq("MP_EMISION_EPA_MASA_PARTICULAS_GKM", "MP_EMISION_MASA_PARTICULAS_EU_GKM"),
@@ -261,26 +322,15 @@ object Stages {
       "NMOG_GKM" -> Seq("NMOG_EMISION_EPA_GKM", "NMOG_EMISION_EU_GKM"),
       "CO_GKM" -> Seq("CO_EMISION_EPA_GKM", "CO_EMISION_EU_GKM"))
     val present = gases
-      .map { case (newcol, listcols) => (newcol, listcols.filter(df.columns.contains)) }
+      .map { case (newcol, listcols) => (newcol, listcols.filter(inputCols.contains)) }
       .filter(_._2.nonEmpty)
-    if (present.isEmpty) return df
-    // two projections total (convert sources in place, add the gas
-    // means) instead of one Project per converted column per gas
-    val converted = replaceColumns(df, present.flatMap(_._2).toSet)(c => tryDouble(col(c)))
-    def gasCol(newcol: String, used: Seq[String]): Column = {
-      val sum = used.map(c => coalesce(col(c), lit(0.0))).reduce(_ + _)
-      (sum / lit(used.size.toDouble)).as(newcol)
+    val means = present.map { case (newcol, used) =>
+      newcol -> used.map(c => coalesce(col(c), lit(0.0))).reduce(_ + _) / lit(used.size.toDouble)
     }
-    // a gas target already present in the input is REPLACED in place
-    // (withColumn semantics), never emitted twice
-    val gasMap = present.toMap
-    val existing = converted.columns.toIndexedSeq.map(c =>
-      gasMap.get(c).map(gasCol(c, _)).getOrElse(col(c)))
-    val appended = present.collect {
-      case (n, used) if !converted.columns.contains(n) => gasCol(n, used)
-    }
-    converted.select(existing ++ appended: _*)
+    ColumnStage(present.flatMap(_._2).distinct.map(_ -> tryDouble _), means)
   }
+
+  def gasesEmissions(df: DataFrame): DataFrame = applyStage(df, gases(df.columns))
 
   /** The BEV-zeroing half of [[bevZeroAndImpute]]
     * (transform_pipeline.py:243): CO₂ is 0 for BEVs. A projection, no

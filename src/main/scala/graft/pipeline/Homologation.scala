@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.ops.{CompatMode, ImporterStandardizer, Stages}
+import graft.ops.{CompatMode, Ffill, ImporterStandardizer, Stages}
 import graft.schema.{HeaderIdentify, HeaderRules}
 
 /** EP2/EP3: the end-to-end homologation transformation (the reference's
@@ -15,7 +15,9 @@ import graft.schema.{HeaderIdentify, HeaderRules}
   * the collected ≤10-row prefix (provably tiny); its outputs — the rename
   * map and `maxrow` — are baked into the plan as literals. The stages
   * after it run over one parse of the grid (persisted when `cache=true`):
-  * one narrow forward-fill pass, then pure Catalyst. Three more bounded
+  * one projection that renames the headers and nulls the `'-'`
+  * sentinels, one narrow forward-fill pass, then the typed stages as two
+  * wide projections ([[stages]]). Three more bounded
   * driver collects build the plan: the forward fill's per-partition
   * preview, one summary aggregate (one row, its importer set ≤ U names)
   * and the scored importer pairs (≤ U×C rows); the importer match is
@@ -54,7 +56,16 @@ object Homologation {
   def transformHeaders(
       grid: DataFrame,
       rules: HeaderRules,
-      orderCol: String = "_row_idx"): DataFrame = {
+      orderCol: String = "_row_idx"): DataFrame =
+    renameHeaders(grid, rules, orderCol, Set.empty)
+
+  /** [[transformHeaders]] with the `'-'` sentinel nulled in the
+    * `sentinels` columns inside the same projection. */
+  private def renameHeaders(
+      grid: DataFrame,
+      rules: HeaderRules,
+      orderCol: String,
+      sentinels: Set[String]): DataFrame = {
     val ident = HeaderIdentify.identifyGrid(grid, orderCol)
     val flatNames = ident.names.map(_._2)
     val stdMap = rules.batchStandardize(flatNames)
@@ -62,12 +73,40 @@ object Homologation {
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
     val selected = ident.names.flatMap { case (idx, flat) =>
       val std = stdMap(flat)
-      if (seen.add(std)) Some(col(dataCols(idx)).as(std)) else None
+      val c = col(dataCols(idx))
+      if (seen.add(std)) Some((if (sentinels(std)) Stages.sentinelToNull(c) else c).as(std))
+      else None
     }
     grid
       .where(col(orderCol) >= ident.maxrow + 2)
       .select(selected :+ col(orderCol): _*)
   }
+
+  /** The forward-filled columns: `'-'` means "same as the row above". */
+  private val sentinelColumns: Seq[String] = Seq("FECHA_HOML", "PESO_BRUTO_VH_KG")
+
+  /** The typed stages of pipeline_transformation
+    * (transform_pipeline.py:221-240) after the forward fill, in the
+    * reference's order, as column definitions over the filled table's
+    * `inputCols`. Applied one by one they are the `Stages.transform*`
+    * chain; [[pipeline]] applies them as [[Stages.layered]]'s two
+    * projections: the per-column conversions (timestamp, category
+    * normalization, `COMBUSTIBLE`, the numeric sources,
+    * `PESO_BRUTO_VH_KG`), then the derived columns (`AÑO`,
+    * `CATEGORIA_PROPULSION`, `TIPO_LDV`, `REND_EQUIV_KML`,
+    * `EMIS_CO2_EQUIV`, the gas means). No stage derives from a column a
+    * later one converts, and none reads a derived column. */
+  def stages(inputCols: Seq[String], mode: CompatMode = CompatMode.Reference): Seq[Stages.ColumnStage] =
+    Seq(
+      Stages.datetime(),
+      Stages.categoryCols(categoryColumns, inputCols),
+      Stages.combustible(),
+      Stages.categoria(),
+      Stages.pbv(),
+      Stages.tipoLdv(),
+      Stages.rend(inputCols, mode = mode),
+      Stages.co2(inputCols),
+      Stages.gases(inputCols))
 
   /** What [[pipeline]] returns: the standardized rows and the importer
     * names without a match, plus the row count and the `AÑO` range
@@ -94,6 +133,12 @@ object Homologation {
     * `cache=false` persists nothing (right for tiny demo grids and for
     * one-shot runs where recompute beats disk-backed caching).
     *
+    * The staged table is the header projection (rename and sentinel
+    * nulls in one select), the forward fill, and [[stages]] composed by
+    * [[Stages.layered]]: over a scan-ordered grid its analyzed plan holds
+    * 2 Projects above the fill's `LogicalRDD` (one per stage half would
+    * be 14, each an analyzer pass on the driver).
+    *
     * Driver collects made while building the result, each one action:
     *  - the header prefix (≤ `HeaderIdentify.MaxScan` rows);
     *  - the forward fill's preview (≤ one row per partition; see
@@ -112,19 +157,11 @@ object Homologation {
       mode: CompatMode = CompatMode.Reference,
       cache: Boolean = true): Result = {
     val raw = if (cache) grid.persist(StorageLevel.MEMORY_AND_DISK) else grid
-    // both '-' columns filled in one pass; the stages in between touch
-    // neither, so this equals transformDatetime ... transformPbv
-    val chain = transformHeaders(raw, rules)
-      .transform(Stages.fillSentinels(_, Seq("FECHA_HOML", "PESO_BRUTO_VH_KG")))
-      .transform(Stages.deriveDatetime(_))
-      .transform(Stages.transformCategoryCols(_, categoryColumns))
-      .transform(Stages.transformCombustible(_))
-      .transform(Stages.transformCategoria(_))
-      .transform(Stages.derivePbv(_))
-      .transform(Stages.transformTipoLdv(_))
-      .transform(Stages.rendEquiv(_, mode = mode))
-      .transform(Stages.co2Equiv(_))
-      .transform(Stages.gasesEmissions(_))
+    // the header projection also nulls both '-' columns, and one pass
+    // fills them: transformHeaders, then fillSentinels over both
+    val filled = Ffill.ffill(
+      renameHeaders(raw, rules, "_row_idx", sentinelColumns.toSet), "_row_idx", sentinelColumns)
+    val chain = Stages.layered(filled, stages(filled.columns, mode))
     val staged = if (cache) chain.persist(StorageLevel.MEMORY_AND_DISK) else chain
     // Stages.bevZeroAndImpute and ImporterStandardizer.standardize, with
     // their two aggregates and the caller's year/row stats in one

@@ -26,9 +26,11 @@ import graft.sources.OrderedScan
   * fires 8: the 3 schema jobs go, since both schemas come from
   * [[graft.sources.SchemaMemo]]. The row count, the `AÑO` range and
   * the not-found names are the pipeline's driver-side results (one row,
-  * ≤ U names), so no action runs after the write. A grid whose data
-  * rows hold no `AÑO` fails with an `IllegalArgumentException` that
-  * names it.
+  * ≤ U names), so no action runs after the write. The grid's index
+  * pass and the forward fill read and build Catalyst rows, so a warm
+  * run decodes no `Row` and reports no `rdd` query execution. A grid
+  * whose data rows hold no `AÑO` fails with an
+  * `IllegalArgumentException` that names it.
   *
   * Usage: runMain graft.pipeline.RunHomologation
   *   <rawGridCsv> <catalogCsv> <outDir> [mappingJson] [reference|intended]

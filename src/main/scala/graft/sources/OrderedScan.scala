@@ -1,8 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.RddBridge
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sources and sinks for the homologation pipeline (SURVEY §2 S3/S4/S7/S8).
   *
@@ -51,9 +55,16 @@ object OrderedScan {
     * non-null and wrecks header-level detection, so a trailing `\r$` is
     * stripped and an empty cell becomes null. `$` also matches before a
     * final line terminator, so a quoted cell ending in "\r\n" keeps only
-    * its "\n". Doing this in the Row map, not as a Catalyst projection
-    * over every column, keeps a ~40-column grid clear of a generated
-    * method too large for the JIT to compile. */
+    * its "\n". Doing this in the index pass, not as a Catalyst
+    * projection over every column, keeps a ~40-column grid clear of a
+    * generated method too large for the JIT to compile.
+    *
+    * The pass runs over the scan's own Catalyst rows
+    * (`queryExecution.toRdd`) and hands its rows back through
+    * [[org.apache.spark.sql.graftbridge.RddBridge.internalDataFrame]], so
+    * no `Row` is built or decoded. The scan reuses its row buffer, so a
+    * cell with no '\r' byte is kept as a clone of its `UTF8String`; only
+    * the rare cell that holds one is decoded for the regex. */
   def csvGrid(spark: SparkSession, path: String, delimiter: String = ","): DataFrame = {
     val raw = SchemaMemo.read(spark, "csv", Map(
       "header" -> "false",
@@ -63,23 +74,33 @@ object OrderedScan {
       // multiLine keeps them inside one logical row (sheet grids are
       // driver-converted and modest, so the single-split read is fine)
       "multiLine" -> "true"), path)
+    val width = raw.schema.length
     val schema = StructType(raw.schema.fields :+ StructField(RowIdx, LongType, nullable = false))
     // zipWithIndex numbers rows in split-offset (file) order from
     // per-partition counts: distributed, one pass, no shuffle
-    val rows = raw.rdd.zipWithIndex.map { case (r, i) =>
-      Row.fromSeq((0 until r.length).map { c =>
-        val v = r.getString(c)
-        if (v == null) null
-        else {
-          val s = TrailingCr.matcher(v).replaceAll("")
-          if (s.isEmpty) null else s
-        }
-      } :+ i)
+    val rows = raw.queryExecution.toRdd.zipWithIndex.map[InternalRow] { case (r, i) =>
+      val out = new GenericInternalRow(width + 1)
+      var c = 0
+      while (c < width) {
+        if (!r.isNullAt(c)) out.update(c, clean(r.getUTF8String(c)))
+        c += 1
+      }
+      out.setLong(width, i)
+      out
     }
-    spark.createDataFrame(rows, schema)
+    RddBridge.internalDataFrame(spark, rows, schema)
   }
 
   private val TrailingCr = java.util.regex.Pattern.compile("\r$")
+  private val Cr = UTF8String.fromString("\r")
+
+  /** One cell of [[csvGrid]]: a trailing '\r' stripped, empty → null. */
+  private def clean(v: UTF8String): UTF8String =
+    if (!v.contains(Cr)) { if (v.numBytes == 0) null else v.clone() }
+    else {
+      val s = TrailingCr.matcher(v.toString).replaceAll("")
+      if (s.isEmpty) null else UTF8String.fromString(s)
+    }
 
   /** S4: catalog CSV with header + explicit schema honoring, else an
     * inferred schema through [[SchemaMemo]]. Lines that start with `#`

@@ -4,6 +4,9 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions.{col, length, lit, regexp_replace, when}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test}
@@ -223,46 +226,40 @@ class RunHomologationSpec extends AnyFunSuite {
   private val MaxJobs = 11
   private val MaxWarmJobs = 8
 
-  // Every query one run executes, walked into AQE stages and into the
-  // staged table's cached plan: the importer mapping is a literal-map
-  // lookup, so no broadcast hash relation (each pins a
-  // spark.buffer.pageSize page on the driver) is built.
-  test("a RunHomologation run builds no hashed broadcast") {
+  /** A physical plan's nodes, walked into AQE stages and into cached
+    * tables' plans. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => planNodes(q.plan)
+    case m: InMemoryTableScanExec => planNodes(m.relation.cachedPlan)
+    case _ => p.children.flatMap(planNodes)
+  })
+
+  /** The name and executed plan of every query execution `body`
+    * reports to a `QueryExecutionListener`. */
+  private def queriesOf(body: => Unit): Seq[(String, SparkPlan)] = {
     import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
-      case _ => p.children.flatMap(nodes)
-    })
-    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val plans = new ConcurrentLinkedQueue[(String, SparkPlan)]
     val ql = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
+        plans.add(f -> qe.executedPlan)
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
-        plans.add(qe.executedPlan)
+        plans.add(f -> qe.executedPlan)
     }
-    val group = "hom-broadcast-probe"
+    val group = "hom-query-probe"
     val flushed = new CountDownLatch(1)
     val fl = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
           flushed.countDown()
     }
-    val dir = Files.createTempDirectory("hom_broadcasts")
     spark.listenerManager.register(ql)
     spark.sparkContext.addSparkListener(fl)
     try {
-      graft.pipeline.RunHomologation.main(Array(
-        demoGridCsv("grid7", "\n", 20).toString, inlineCatalog(dir).toString,
-        dir.resolve("out").toString))
+      body
       // query-execution events share the listener bus queue with job
       // events, so once this job's start lands they have all arrived
       spark.sparkContext.setJobGroup(group, "flush")
@@ -273,13 +270,74 @@ class RunHomologationSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(fl)
       spark.listenerManager.unregister(ql)
     }
-    val broadcasts = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes)
+    plans.toArray(Array.empty[(String, SparkPlan)]).toSeq
+  }
+
+  // Every query one run executes, walked into AQE stages and into the
+  // staged table's cached plan: the importer mapping is a literal-map
+  // lookup, so no broadcast hash relation (each pins a
+  // spark.buffer.pageSize page on the driver) is built.
+  test("a RunHomologation run builds no hashed broadcast") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    val dir = Files.createTempDirectory("hom_broadcasts")
+    val plans = queriesOf(graft.pipeline.RunHomologation.main(Array(
+      demoGridCsv("grid7", "\n", 20).toString, inlineCatalog(dir).toString,
+      dir.resolve("out").toString)))
+    val broadcasts = plans.flatMap(q => planNodes(q._2))
       .collect { case b: BroadcastExchangeExec => b }
       .distinctBy(System.identityHashCode)
     val hashed = broadcasts.filter(_.mode.isInstanceOf[HashedRelationBroadcastMode])
     info(s"${plans.size} queries, ${broadcasts.size} broadcasts, ${hashed.size} hashed")
     assert(plans.size > 0)
     assert(hashed.isEmpty, s"${hashed.size} hashed broadcasts")
+  }
+
+  // The grid's index pass and the forward fill read and build Catalyst
+  // rows: `Dataset.rdd` would report an "rdd" execution, whose plan
+  // decodes every row into a Row (DeserializeToObjectExec).
+  test("a warm RunHomologation run decodes no Row: no rdd execution, no DeserializeToObjectExec") {
+    import org.apache.spark.sql.execution.DeserializeToObjectExec
+    val dir = Files.createTempDirectory("hom_rows")
+    val grid = demoGridCsv("grid9", "\n", 20)
+    val catalog = inlineCatalog(dir)
+    def run(name: String): Unit = graft.pipeline.RunHomologation.main(Array(
+      grid.toString, catalog.toString, dir.resolve(name).toString))
+    run("cold")
+    val plans = queriesOf(run("warm"))
+    val rddRuns = plans.count(_._1 == "rdd")
+    val decodes = plans.flatMap(q => planNodes(q._2)).count(_.isInstanceOf[DeserializeToObjectExec])
+    info(s"${plans.size} queries: $rddRuns rdd executions, $decodes DeserializeToObjectExec")
+    assert(plans.nonEmpty)
+    assert(rddRuns == 0, s"$rddRuns rdd executions")
+    assert(decodes == 0, s"$decodes DeserializeToObjectExec nodes")
+  }
+
+  // The typed stages are two layers of column definitions (conversions,
+  // then derived columns), not one analyzed Project per stage half (14).
+  test("the staged table is at most three analyzed projections above the forward fill") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
+    import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+    import org.apache.spark.sql.execution.LogicalRDD
+    val dir = Files.createTempDirectory("hom_layers")
+    val grid = OrderedScan.csvGrid(spark, demoGridCsv("grid10", "\n", 20).toString)
+    val catalog = OrderedScan.csvCatalog(spark, inlineCatalog(dir).toString)
+    val result = graft.pipeline.Homologation.pipeline(
+      grid, new graft.schema.HeaderRules(), catalog)
+    try {
+      val cm = spark.sharedState.cacheManager
+      // the topmost cached subtree of the result is the staged table
+      val staged = result.standardized.queryExecution.analyzed
+        .find(p => cm.lookupCachedData(castToImpl(spark), p).isDefined)
+      assert(staged.isDefined, "the staged table should be cached")
+      val plan = staged.get
+      // a scan-ordered fill leaves one LogicalRDD and no window below
+      assert(plan.collect { case r: LogicalRDD => r }.size == 1, plan.treeString)
+      assert(plan.collect { case w: Window => w }.isEmpty, plan.treeString)
+      val projects = plan.collect { case p: Project => p }.size
+      info(s"$projects analyzed Projects above the fill")
+      assert(projects <= 3, plan.treeString)
+    } finally result.release()
   }
 
   test("a grid whose data rows hold no AÑO fails naming the grid") {
@@ -303,16 +361,9 @@ class RunHomologationSpec extends AnyFunSuite {
   test("the staged chain below the staging persist has no window, shuffle or broadcast") {
     import org.apache.spark.ShuffleDependency
     import org.apache.spark.rdd.RDD
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import org.apache.spark.sql.execution.exchange.Exchange
     import org.apache.spark.sql.execution.window.WindowExec
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case _ => p.children.flatMap(nodes)
-    })
     def shuffles(rdd: RDD[_]): Boolean = rdd.dependencies.exists {
       case _: ShuffleDependency[_, _, _] => true
       case d => shuffles(d.rdd)
@@ -329,7 +380,7 @@ class RunHomologationSpec extends AnyFunSuite {
       }
       assert(staged.nonEmpty, "the staged table should be cached")
       staged.foreach { r =>
-        val bad = nodes(r.cachedPlan).filter(n =>
+        val bad = planNodes(r.cachedPlan).filter(n =>
           n.isInstanceOf[WindowExec] || n.isInstanceOf[Exchange])
         assert(bad.isEmpty, s"below the staging persist: ${bad.map(_.nodeName)}")
         assert(!shuffles(r.cacheBuilder.cachedColumnBuffers),

@@ -106,16 +106,48 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("tune is one idempotent injection point for the optimizer rule and the SQL functions") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val functions = Seq("unaccent", "similarity_ratio", "nfc_clean", "jaro_winkler",
+      "outlier_threshold", "misra_gries").map(FunctionIdentifier(_))
     val s = GraftSession.local(4, "graft-test")
-    GraftSession.tune(s)
-    GraftSession.tune(s)
+    val registry = s.sessionState.functionRegistry
+    def registered = functions.map(f => (registry.lookupFunction(f), registry.lookupFunctionBuilder(f)))
+    val before = registered
+    assert(before.forall(r => r._1.isDefined && r._2.isDefined))
+    // a repeated tune replaces no function, so it logs no replacement
+    val replaced = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("tune-replacements", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("replaced a previously registered function"))
+          replaced.incrementAndGet()
+    }
+    val logger = LogManager.getLogger(registry.getClass.getName).asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      GraftSession.tune(s)
+      GraftSession.tune(s)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(replaced.get == 0, s"${replaced.get} functions replaced")
+    registered.zip(before).zip(functions).foreach { case (((info, builder), (info0, builder0)), f) =>
+      assert((info.get eq info0.get) && (builder.get eq builder0.get), s"$f was registered again")
+    }
     assert(s.experimental.extraOptimizations.count(_ == SimilarityLengthPruning) == 1)
 
     // a fresh session state knows none of graft's functions until tune
     val fresh = s.newSession()
     assert(fresh.experimental.extraOptimizations.isEmpty)
     intercept[org.apache.spark.sql.AnalysisException](fresh.sql("SELECT unaccent('a')").first())
+    assert(functions.forall(!fresh.sessionState.functionRegistry.functionExists(_)))
     GraftSession.tune(fresh)
+    assert(functions.forall(fresh.sessionState.functionRegistry.functionExists))
     val r = fresh.sql(
       "SELECT unaccent('Homologación') AS u, ROUND(similarity_ratio('abc', 'abd'), 4) AS s")
       .first()

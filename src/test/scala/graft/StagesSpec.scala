@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{CompatMode, Stages}
+import graft.pipeline.Homologation
 
 /** F1–F12/A1/A3 transform stages, with the reference quirks (SURVEY §2.8
   * F12 a–d) pinned in both CompatModes. */
@@ -125,5 +129,60 @@ class StagesSpec extends AnyFunSuite {
       .map(r => (r.getDouble(0), r.getDouble(1)))
     // bev co2 → 0; mean co2 = (0+100)/2 = 50; mean rend = (10+20)/2 = 15
     assert(out.toSeq == Seq((0.0, 10.0), (50.0, 15.0), (100.0, 20.0)))
+  }
+
+  // A filled table with every column a stage reads, over the propulsion ×
+  // combustible key space, numeric cells cycling through numbers, '-',
+  // garbage, "" and null, and a gas target (CO_GKM) already present.
+  private def wideFilled: DataFrame = {
+    val props = Seq("Combustión", "Vehículo Eléctrico", "vehiculos hibrido con recarga exterior",
+      "vehiculos hibridos con recarga exterior", "electrico hibrido con recarga exterior",
+      "Vehículos Híbridos sin Recarga Exterior", "vehiculos celda de hidrogeno",
+      "electrico de rango extendido", "otro", null)
+    val combs = Seq("GASOLINA", "Diésel", "", null, "Eléctrico", "gasolina/glp", "GASOLINA/GNC",
+      "gasolina/hibrido", "hidrogreno", "Hidrógeno")
+    val numeric = Seq("12.5", "-", "x", "", null, "3", "0.25")
+    val sources = Seq("MIXTO_REND_COMBUSTIBLE_KML", "REND_EV_VH_KMKWH", "COMB_REND_WLTC_KML",
+      "REND_LOW_H2_KG_100_KM_FCEV_VH_CELDA", "MIXTO_REND_GASOL_VH_GLP_GNC_KML",
+      "EMIS_CO2_GKM", "CO2_VH_GASOL_GLP_GNC_GRKM", "CO2_PHEV_REND_PONDERADO_VH_GKM",
+      "N2O_EMISION_EPA", "MP_EMISION_EPA_MASA_PARTICULAS_GKM", "EMISION_NPS_KM_EU_KM",
+      "HCHO_EMISION_EPA_MGKM", "HCHO_EMISION_EU_MGKM", "HC_EMISION_EU_GKM",
+      "HC_NOX_EMISION_EU_GKM", "NMOG_NOX_EMISION_EPA", "NOX_EMISION_EPA_GKM",
+      "CO_EMISION_EPA_GKM", "CO_EMISION_EU_GKM", "CO_GKM")
+    val text = Seq("CATEGORIA_VH", "IMPORTADOR", "MARCA", "MODELO", "EMIS_NORMA", "TIPO_CARROCERIA")
+    val rows = for ((p, i) <- props.zipWithIndex; (c, j) <- combs.zipWithIndex) yield {
+      val k = i * combs.size + j
+      Row.fromSeq(Seq(k.toLong, if (k % 5 == 0) null else s"201${k % 9}-0${k % 9 + 1}-1${k % 7}",
+        numeric((k + 2) % numeric.size), p, c) ++
+        text.map(t => if (k % 4 == 0) null else s" ${t.take(3)} Ñandú $k ") ++
+        sources.indices.map(n => numeric((k * 3 + n) % numeric.size)))
+    }
+    val names = Seq("_row_idx", "FECHA_HOML", "PESO_BRUTO_VH_KG", "PROPULSION", "COMBUSTIBLE") ++
+      text ++ sources
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), StructType(names.map(n =>
+      StructField(n, if (n == "_row_idx") LongType else StringType))))
+  }
+
+  test("the homologation stages as two layers equal the per-stage chain") {
+    val filled = wideFilled
+    def rows(df: DataFrame) = df.orderBy("_row_idx").collect().map(_.toSeq).toSeq
+    def projects(df: DataFrame) = df.queryExecution.analyzed.collect { case p: Project => p }.size
+    for (mode <- Seq(CompatMode.Reference, CompatMode.Intended)) {
+      val chain = filled
+        .transform(Stages.deriveDatetime(_))
+        .transform(Stages.transformCategoryCols(_, Homologation.categoryColumns))
+        .transform(Stages.transformCombustible(_))
+        .transform(Stages.transformCategoria(_))
+        .transform(Stages.derivePbv(_))
+        .transform(Stages.transformTipoLdv(_))
+        .transform(Stages.rendEquiv(_, mode = mode))
+        .transform(Stages.co2Equiv(_))
+        .transform(Stages.gasesEmissions(_))
+      val layered = Stages.layered(filled, Homologation.stages(filled.columns, mode))
+      assert(projects(chain) - projects(filled) == 14)
+      assert(projects(layered) - projects(filled) == 2)
+      assert(layered.schema == chain.schema)
+      assert(rows(layered) == rows(chain), mode)
+    }
   }
 }
